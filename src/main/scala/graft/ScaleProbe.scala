@@ -54,7 +54,7 @@ object ScaleProbe {
 
     // ---- managed parquet: COW + time travel at orders size ----------
     {
-      val wh = s"/tmp/graft_probe_pq_${java.util.UUID.randomUUID.toString.take(8)}"
+      val wh = ScratchDirs.create("graft_probe_pq_")
       val eng = new graft.engine.GraftEngine(spark, wh, initialRetention = 10)
       eng.sql("create schema probe"); eng.sql("use probe")
       eng.sql(s"create external table src USING PARQUET LOCATION '$sfDir/orders.parquet'")
@@ -94,7 +94,7 @@ object ScaleProbe {
 
     // ---- managed kv: LSM chain at orders size -----------------------
     {
-      val wh = s"/tmp/graft_probe_kv_${java.util.UUID.randomUUID.toString.take(8)}"
+      val wh = ScratchDirs.create("graft_probe_kv_")
       val eng = new graft.engine.GraftEngine(spark, wh)
       eng.sql("create schema probe"); eng.sql("use probe")
       eng.sql(s"create external table src USING PARQUET LOCATION '$sfDir/orders.parquet'")
@@ -122,7 +122,7 @@ object ScaleProbe {
     // script inside BEGIN…COMMIT pays ONE info-schema write, vs one
     // per statement under autocommit (writeVersion defers to endTxn)
     {
-      val wh = s"/tmp/graft_probe_tx_${java.util.UUID.randomUUID.toString.take(8)}"
+      val wh = ScratchDirs.create("graft_probe_tx_")
       val eng = new graft.engine.GraftEngine(spark, wh, initialRetention = 40)
       eng.sql("create schema probe"); eng.sql("use probe")
       eng.sql(s"create external table src USING PARQUET LOCATION '$sfDir/customer.parquet'")

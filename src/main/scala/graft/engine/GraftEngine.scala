@@ -3,9 +3,12 @@ package graft.engine
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, ExtendedMode, SimpleMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import SqlText._
 
@@ -831,17 +834,15 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       case AffectedRows(n) =>
         throw Errors.generic(s"statement returned count $n, not rows")
     }
-    import spark.implicits._
     if (analyze) {
       // run the plan for real, then report it with runtime metrics —
       // the reference executes the explain plan too (explain.rs:41-105)
       val qe = df.queryExecution
       qe.toRdd.count() // executes without collecting rows to the driver
-      def metricLines(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[(String, String)] = {
+      def metricLines(p: org.apache.spark.sql.execution.SparkPlan): Seq[Row] = {
         val self =
           if (p.metrics.isEmpty) Seq.empty
-          else Seq("metric" -> (p.nodeName + ": " +
+          else Seq(Row("metric", p.nodeName + ": " +
             p.metrics.toSeq.sortBy(_._1)
               .map { case (k, sm) => s"$k=${sm.value}" }.mkString(", ")))
         val kids = p match {
@@ -855,14 +856,14 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       }
       val planRows = qe
         .explainString(if (verbose) ExtendedMode else SimpleMode)
-        .split("\n").toSeq.map(l => ("plan", l))
-      ResultSet((planRows ++ metricLines(qe.executedPlan))
-        .toDF("plan_type", "plan"))
+        .split("\n").toSeq.map(l => Row("plan", l))
+      ResultSet(stringResult("plan_type", "plan")(
+        planRows ++ metricLines(qe.executedPlan)))
     } else {
       val text = df.queryExecution
         .explainString(if (verbose) ExtendedMode else SimpleMode)
-      ResultSet(text.split("\n").toSeq.map(l => ("plan", l))
-        .toDF("plan_type", "plan"))
+      ResultSet(stringResult("plan_type", "plan")(
+        text.split("\n").toSeq.map(l => Row("plan", l))))
     }
   }
 
@@ -2656,20 +2657,30 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     showColumns(lookup(t))
   }
 
+  /** A result whose rows are already on the driver: a LocalRelation
+    * over an explicit schema. No encoder is derived by reflection, and
+    * it plans as a `LocalTableScanExec`, which the wire returns with no
+    * Spark job. Nullability is the tuple encoders': strings nullable,
+    * numbers not. */
+  private def localResult(cols: (String, DataType)*)(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(cols.map { case (n, t) =>
+      StructField(n, t, nullable = t == StringType) }))
+
+  private def stringResult(names: String*)(rows: Seq[Row]): DataFrame =
+    localResult(names.map(_ -> StringType): _*)(rows)
+
   private def showColumns(td: TableDef): GraftResult = {
-    import spark.implicits._
     val rows = td.columns.map { c =>
       val key =
         if (td.primaryKey.contains(c.name)) "PRI"
         else if (td.uniques.exists(_._2.contains(c.name))) "UNI"
         else ""
-      (c.name, c.sqlType, if (c.nullable) "YES" else "NO", key, "NULL", "")
+      Row(c.name, c.sqlType, if (c.nullable) "YES" else "NO", key, "NULL", "")
     }
-    ResultSet(rows.toDF("Field", "Type", "Null", "Key", "Default", "Extra"))
+    ResultSet(stringResult("Field", "Type", "Null", "Key", "Default", "Extra")(rows))
   }
 
   private def doShow(stmt: String): GraftResult = {
-    import spark.implicits._
     val lower = stmt.toLowerCase.replaceAll("\\s+", " ").trim
     val likePat = "(?is).*\\slike\\s+'([^']*)'\\s*$".r
       .findFirstMatchIn(stmt).map(_.group(1))
@@ -2678,7 +2689,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       // built from the in-memory catalog (not the shared external
       // tables) so concurrent engines on one SparkSession don't
       // cross-talk; same output as SELECT schema_name FROM schemata
-      ResultSet(schemas.toSeq.sorted.toDF("Database"))
+      ResultSet(stringResult("Database")(schemas.toSeq.sorted.map(Row(_))))
     } else if (lower.matches("show (full )?tables.*")) {
       val full = lower.startsWith("show full")
       val db = "(?is)\\s(?:from|in)\\s+(\\w+)".r.findFirstMatchIn(stmt)
@@ -2686,11 +2697,11 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         .orElse(currentSchema)
         .getOrElse(throw Errors.noSchemaSelected)
       if (!schemas.contains(db)) throw Errors.unknownDb(db)
-      val base = (tables.values.filter(_.schema == db).toSeq
-        .map(t => (t.name, "BASE TABLE")) ++
-        views.keys.filter(_._1 == db).map(v => (v._2, "VIEW")))
-        .sortBy(_._1)
-        .toDF(s"Tables_in_$db", "Table_type")
+      val base = stringResult(s"Tables_in_$db", "Table_type")(
+        (tables.values.filter(_.schema == db).toSeq
+          .map(t => (t.name, "BASE TABLE")) ++
+          views.keys.filter(_._1 == db).map(v => (v._2, "VIEW")))
+          .sortBy(_._1).map(Row.fromTuple))
       val filtered = likeFilter(base, s"Tables_in_$db", likePat)
       ResultSet(if (full) filtered else filtered.drop("Table_type"))
     } else if (lower.startsWith("show columns") || lower.startsWith("show fields")) {
@@ -2702,12 +2713,12 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       val raw = stmt.trim.split("\\s+").last
       val (cs, cn) = resolveName(raw)
       if (views.contains((cs, cn)))
-        ResultSet(Seq((cn, s"CREATE VIEW $cn AS ${views((cs, cn))}"))
-          .toDF("View", "Create View"))
+        ResultSet(stringResult("View", "Create View")(
+          Seq(Row(cn, s"CREATE VIEW $cn AS ${views((cs, cn))}"))))
       else {
         val td = lookup(raw)
-        ResultSet(Seq((td.name, td.createTableSql))
-          .toDF("Table", "Create Table"))
+        ResultSet(stringResult("Table", "Create Table")(
+          Seq(Row(td.name, td.createTableSql))))
       }
     } else if (lower.matches("show versions (for|from|in) .*")) {
       // time-travel history: the on-disk version directories still
@@ -2724,65 +2735,70 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
           val parts = Option(d.listFiles()).getOrElse(Array.empty[File])
             .filter(f => f.isFile && f.getName.endsWith(".parquet"))
           val v = d.getName.drop(1).toLong
-          (v, if (new File(d, "_SUCCESS").exists()) "YES" else "NO",
+          Row(v, if (new File(d, "_SUCCESS").exists()) "YES" else "NO",
             parts.length.toLong, parts.map(_.length).sum,
             if (v == td.version) "YES" else "NO")
-        }.sortBy(-_._1).toSeq
-      ResultSet(rows.toDF("Version", "Committed", "Files", "Bytes", "Current"))
+        }.sortBy(-_.getLong(0)).toSeq
+      ResultSet(localResult("Version" -> LongType, "Committed" -> StringType,
+        "Files" -> LongType, "Bytes" -> LongType, "Current" -> StringType)(rows))
     } else if (lower.startsWith("show variables")) {
       // LIKE deviation: filter on the NAME (the reference filters on
       // the value, show_variables.rs:75-83 — a bug). WHERE filters
       // over (Variable_name, Value) like the reference's WHERE arm
       // (show_variables.rs:49-118).
-      val base = globals.toSeq.sortBy(_._1)
-        .toDF("Variable_name", "Value")
+      val base = stringResult("Variable_name", "Value")(
+        globals.toSeq.sortBy(_._1).map(Row.fromTuple))
       val whereIdx = indexOfKeyword(stmt, "where")
       if (whereIdx >= 0)
         ResultSet(base.filter(expr(rewrite(stmt.substring(whereIdx + 5)))))
       else ResultSet(likeFilter(base, "Variable_name", likePat))
     } else if (lower.startsWith("show engines")) {
-      ResultSet(Seq(("Parquet", "DEFAULT",
-        "Columnar parquet storage on Spark", "NO", "NO", "NO"))
-        .toDF("Engine", "Support", "Comment", "Transactions", "XA", "Savepoints"))
+      ResultSet(stringResult("Engine", "Support", "Comment", "Transactions",
+        "XA", "Savepoints")(Seq(Row("Parquet", "DEFAULT",
+        "Columnar parquet storage on Spark", "NO", "NO", "NO"))))
     } else if (lower.startsWith("show charset") ||
       lower.startsWith("show character set")) {
-      ResultSet(Seq(("utf8mb4", "UTF-8 Unicode", "utf8mb4_0900_ai_ci", 4L))
-        .toDF("Charset", "Description", "Default collation", "Maxlen"))
+      ResultSet(localResult("Charset" -> StringType, "Description" -> StringType,
+        "Default collation" -> StringType, "Maxlen" -> LongType)(
+        Seq(Row("utf8mb4", "UTF-8 Unicode", "utf8mb4_0900_ai_ci", 4L))))
     } else if (lower.startsWith("show collation")) {
-      ResultSet(Seq(("utf8mb4_0900_ai_ci", "utf8mb4", 255L, "Yes", "Yes", 0L))
-        .toDF("Collation", "Charset", "Id", "Default", "Compiled", "Sortlen"))
+      ResultSet(localResult("Collation" -> StringType, "Charset" -> StringType,
+        "Id" -> LongType, "Default" -> StringType, "Compiled" -> StringType,
+        "Sortlen" -> LongType)(
+        Seq(Row("utf8mb4_0900_ai_ci", "utf8mb4", 255L, "Yes", "Yes", 0L))))
     } else if (lower.startsWith("show grants")) {
-      ResultSet(Seq("GRANT ALL PRIVILEGES ON *.* TO 'root'@'%'")
-        .toDF("Grants for root@%"))
+      ResultSet(stringResult("Grants for root@%")(
+        Seq(Row("GRANT ALL PRIVILEGES ON *.* TO 'root'@'%'"))))
     } else if (lower.startsWith("show privileges")) {
-      ResultSet(Seq(
-        ("Select", "Tables", "To retrieve rows from table"),
-        ("Insert", "Tables", "To insert data into tables"),
-        ("Update", "Tables", "To update existing rows"),
-        ("Delete", "Tables", "To delete existing rows"))
-        .toDF("Privilege", "Context", "Comment"))
+      ResultSet(stringResult("Privilege", "Context", "Comment")(Seq(
+        Row("Select", "Tables", "To retrieve rows from table"),
+        Row("Insert", "Tables", "To insert data into tables"),
+        Row("Update", "Tables", "To update existing rows"),
+        Row("Delete", "Tables", "To delete existing rows"))))
     } else if (lower.matches("show (full )?processlist")) {
       // synthesized from the live-session registry (§2.9's pattern);
       // the calling session shows as Query/executing with this very
       // statement as Info — MySQL's own behavior
       val now = System.currentTimeMillis
       val rows = allSessions.map { s =>
-        (s.id, "root", "localhost", s.currentSchema.orNull,
+        Row(s.id, "root", "localhost", s.currentSchema.orNull,
           if (s.busy) "Query" else "Sleep",
           math.max(0L, (now - s.stateSince) / 1000L),
           if (s.busy) "executing" else "",
           if (s.busy) s.lastInfo else null)
       }
-      ResultSet(rows.toDF("Id", "User", "Host", "db", "Command",
-        "Time", "State", "Info"))
+      ResultSet(localResult("Id" -> LongType, "User" -> StringType,
+        "Host" -> StringType, "db" -> StringType, "Command" -> StringType,
+        "Time" -> LongType, "State" -> StringType, "Info" -> StringType)(rows))
     } else if (lower.startsWith("show table status")) {
       val db = "(?is)\\s(?:from|in)\\s+(\\w+)".r.findFirstMatchIn(stmt)
         .map(g => ident(g.group(1)))
         .orElse(currentSchema)
         .getOrElse(throw Errors.noSchemaSelected)
       val rows = tables.values.filter(_.schema == db).toSeq.sortBy(_.name)
-        .map(t => (t.name, "Parquet", t.version))
-      ResultSet(rows.toDF("Name", "Engine", "Version"))
+        .map(t => Row(t.name, "Parquet", t.version))
+      ResultSet(localResult("Name" -> StringType, "Engine" -> StringType,
+        "Version" -> LongType)(rows))
     } else throw Errors.generic(s"unsupported SHOW: $stmt")
   }
 

@@ -404,7 +404,7 @@ object EventsQ {
       (s, dir) => {
         val doubled = tblStream(s, dir, "events")
           .unionAll(tblStream(s, dir, "events"))
-        val out = s"/tmp/graft_q59_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val out = graft.ScratchDirs.create("graft_q59_")
         val sq = doubled.dropDuplicates("event_id").writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .format("parquet").option("path", s"$out/data")
@@ -449,7 +449,7 @@ object EventsQ {
         val joined = graft.streaming.EventStreams.viewPurchaseJoin(
           views, purchases, intervalMs = 3600000L,
           watermark = "30 days", joinType = "inner")
-        val out = s"/tmp/graft_q60_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val out = graft.ScratchDirs.create("graft_q60_")
         val sq = joined.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .format("parquet").option("path", s"$out/data")
@@ -572,7 +572,7 @@ object EventsQ {
     // stream→segment→scan round trip.
     "q71_stream_engine_ingest" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q71_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q71_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q71")
         eng.sql("use q71")
@@ -668,7 +668,7 @@ object EventsQ {
     // run-to-completion). Oracle: plain GROUP BY over the source.
     "q75_stream_merge" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q75_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q75_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q75")
         eng.sql("use q75")
@@ -784,7 +784,7 @@ object EventsQ {
       h = h * 31 + f.length()
       h = h * 31 + f.lastModified()
     }
-    s"/tmp/graft_${tag}_${java.lang.Long.toHexString(h)}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${java.lang.Long.toHexString(h)}"
   }
 
   /** A fixture is complete only once sealed: a crash mid-build leaves

@@ -779,7 +779,7 @@ object Parity {
     // directly, so it outlives the warehouse).
     "q62_engine_sql" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q62_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q62_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q62")
         eng.sql("use q62")
@@ -824,7 +824,7 @@ object Parity {
     // smallest interesting fact table), so the entry stays cheap.
     "q63_engine_time_travel" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q63_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q63_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.setVersionRetention(10)
         eng.sql("create schema q63")
@@ -882,7 +882,7 @@ object Parity {
     // reconstructs all three row classes from the source table.
     "q64_engine_cdf" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q64_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q64_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.setVersionRetention(10)
         eng.sql("create schema q64")
@@ -934,7 +934,7 @@ object Parity {
     // with the same literals inlined.
     "q65_engine_prepared" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q65_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q65_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q65")
         eng.sql("use q65")
@@ -971,7 +971,7 @@ object Parity {
     // post-delete materialization declaratively.
     "q73_engine_ctas" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q73_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q73_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q73")
         eng.sql("use q73")
@@ -1009,7 +1009,7 @@ object Parity {
     // (the cross-engine float discipline).
     "q74_engine_merge" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q74_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q74_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q74")
         eng.sql("use q74")
@@ -1084,7 +1084,7 @@ object Parity {
     // both states declaratively from the source table.
     "q76_engine_restore" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q76_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q76_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.setVersionRetention(10)
         eng.sql("create schema q76")
@@ -1141,7 +1141,7 @@ object Parity {
     // surface (it ships only the view privilege flags).
     "q77_engine_view" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q77_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q77_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q77")
         eng.sql("use q77")
@@ -1204,7 +1204,7 @@ object Parity {
     // exactly those, declaratively.
     "q78_engine_txn" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q78_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q78_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q78")
         eng.sql("use q78")
@@ -1267,7 +1267,7 @@ object Parity {
     // inside the engine.
     "q79_wire_query" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q79_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q79_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q79")
         eng.sql("use q79")
@@ -1336,7 +1336,7 @@ object Parity {
     // offset, or type code would hash-mismatch.
     "q84_wire_prepared" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q84_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q84_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q84")
         eng.sql("use q84")
@@ -1394,7 +1394,7 @@ object Parity {
     // would break the parse or the hash.
     "q85_wire_multi" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q85_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q85_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q85")
         eng.sql("use q85")
@@ -1468,7 +1468,7 @@ object Parity {
     // packet parse; a value error breaks the hash.
     "q86_wire_multi_resultsets" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q86_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q86_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q86")
         eng.sql("use q86")
@@ -1532,7 +1532,7 @@ object Parity {
     // value-exact.
     "q80_engine_orc" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q80_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q80_")
         val orcDir = s"$wh/orc_src"
         s.read.parquet(s"$dir/customer.parquet")
           .write.mode("overwrite").orc(orcDir)
@@ -1568,7 +1568,7 @@ object Parity {
     // balance, hits+1), 1001–1500 fresh inserts.
     "q81_engine_upsert" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q81_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q81_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q81")
         eng.sql("use q81")
@@ -1614,7 +1614,7 @@ object Parity {
     // image declaratively.
     "q82_engine_replace" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q82_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q82_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q82")
         eng.sql("use q82")
@@ -1647,7 +1647,7 @@ object Parity {
     // reconstructs the final image declaratively.
     "q83_engine_insert_ignore" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q83_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q83_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q83")
         eng.sql("use q83")
@@ -1687,7 +1687,7 @@ object Parity {
     // replays insert→update→delete→read declaratively over customer.
     "q68_engine_kv_dml" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q68_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q68_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q68")
         eng.sql("use q68")
@@ -1724,7 +1724,7 @@ object Parity {
     // results, and this entry makes that a driver-gated invariant).
     "q69_engine_zorder" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q69_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q69_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.sql("create schema q69")
         eng.sql("use q69")
@@ -1764,7 +1764,7 @@ object Parity {
     // recomputed, through the driver's gate.
     "q70_engine_incremental" -> Q(
       (s, dir) => {
-        val wh = s"/tmp/graft_q70_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        val wh = graft.ScratchDirs.create("graft_q70_")
         val eng = new graft.engine.GraftEngine(s, wh)
         eng.setVersionRetention(10)
         eng.sql("create schema q70")

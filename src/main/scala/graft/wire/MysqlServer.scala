@@ -4,9 +4,14 @@ import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.engine.{AffectedRows, GraftEngine, GraftException, ResultSet}
+import graft.engine.{AffectedRows, GraftEngine, GraftException, GraftResult,
+  GraftSession, ResultSet}
 import Packets._
 
 /** MySQL wire-protocol front end for the engine — the LAST reference
@@ -35,6 +40,13 @@ import Packets._
   * reference's all-text row conversion (`core_util.rs:357-427`);
   * LONGLONG/DOUBLE go binary in COM_STMT_EXECUTE responses per the
   * binary protocol.
+  *
+  * Both protocols share one result writer ([[respondAt]]). A result
+  * whose rows already sit on the driver — SHOW, DESCRIBE, EXPLAIN and
+  * VALUES, which plan as a `LocalTableScanExec` — goes out with no
+  * Spark job. Every other result streams with `toLocalIterator`, one
+  * job per partition; that includes a SELECT of constants, which plans
+  * as a projection over `OneRowRelation`.
   */
 class MysqlServer(engine: GraftEngine, port: Int = 0) {
 
@@ -185,8 +197,8 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
               var i = 0
               var aborted = false
               while (i < parts.length && !aborted) {
-                val (next, wasErr) = respondAt(session, out, parts(i),
-                  seq, more = i < parts.length - 1)
+                val (next, wasErr) = respondAt(session, out, seq,
+                  more = i < parts.length - 1, binary = false)(session.sql(parts(i)))
                 seq = next
                 aborted = wasErr
                 i += 1
@@ -264,45 +276,8 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
                   }
                 }
               }
-            try {
-              session.executePrepared(id, params) match {
-                case AffectedRows(cnt) => flushPackets(1, Seq(ok(cnt)))
-                case ResultSet(df) =>
-                  val schema = df.schema
-                  val tcs = schema.fields.map(f => f.dataType match {
-                    case LongType => TypeLongLong
-                    case DoubleType => TypeDouble
-                    case _ => TypeVarString
-                  })
-                  val defs = schema.fields.zip(tcs).map { case (f, tc) =>
-                    columnDef(session.currentSchema.getOrElse(""), "", f.name, tc)
-                  }.toSeq
-                  var seq = 1
-                  ((new Writer().lenenc(schema.fields.length.toLong).result()
-                      +: defs) :+ eof()).foreach { p =>
-                    writePacket(out, seq, p); seq += 1
-                  }
-                  // stream rows partition-by-partition: driver memory
-                  // stays O(partition), not O(result)
-                  df.toLocalIterator().forEachRemaining { row =>
-                    writePacket(out, seq, binaryRow(
-                      schema.fields.indices.map { i =>
-                        val v = if (row.isNullAt(i)) None
-                          else Some(row.get(i) match {
-                            case l: Long => l
-                            case d: Double => d
-                            case other => other.toString
-                          })
-                        (v, tcs(i))
-                      }))
-                    seq += 1
-                  }
-                  writePacket(out, seq, eof())
-                  out.flush()
-              }
-            } catch {
-              case e: GraftException => flushPackets(1, Seq(err(e.code, e.msg)))
-            }
+            respondAt(session, out, 1, more = false, binary = true)(
+              session.executePrepared(id, params))
           case ComStmtSendLongData =>
             // chunked parameter upload: payload = stmt id, param
             // index, raw chunk; chunks CONCATENATE per (stmt, param)
@@ -383,66 +358,87 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
   }
 
   /** COM_QUERY: run through the engine, frame the result. */
-  private def respond(session: graft.engine.GraftSession,
+  private def respond(session: GraftSession,
       out: java.io.OutputStream, sqlText: String): Unit = {
-    respondAt(session, out, sqlText, 1, more = false); ()
+    respondAt(session, out, 1, more = false, binary = false)(session.sql(sqlText)); ()
   }
 
-  /** One statement's response starting at packet `seqStart`. `more`
-    * sets SERVER_MORE_RESULTS_EXISTS on the terminating OK/EOF so a
-    * multi-statement client keeps reading. Returns (next sequence
-    * id, whether the response was an ERR — which aborts the rest of
-    * a multi-statement batch). */
-  private def respondAt(session: graft.engine.GraftSession,
-      out: java.io.OutputStream, sqlText: String,
-      seqStart: Int, more: Boolean): (Int, Boolean) = {
+  /** One statement's response starting at packet `seqStart`, for both
+    * protocols: OK, ERR, or a result set in text rows (COM_QUERY) or
+    * binary rows (COM_STMT_EXECUTE). `more` sets
+    * SERVER_MORE_RESULTS_EXISTS on the terminating OK/EOF so a
+    * multi-statement client keeps reading. Returns (next sequence id,
+    * whether the response was an ERR — which aborts the rest of a
+    * multi-statement batch).
+    *
+    * The statement runs and its result is planned before any byte goes
+    * out, so a parse, analysis or planning error answers a plain ERR.
+    * An error while rows stream ends the result set with ERR in place
+    * of the final EOF; the connection stays usable either way. */
+  private def respondAt(session: GraftSession, out: java.io.OutputStream,
+      seqStart: Int, more: Boolean, binary: Boolean)(
+      run: => GraftResult): (Int, Boolean) = {
     val status = ServerStatusAutocommit |
       (if (more) ServerMoreResultsExists else 0)
-    val payloads: Either[Array[Byte], org.apache.spark.sql.DataFrame] =
-      try session.sql(sqlText) match {
-        case AffectedRows(n) => Left(ok(n, 0L, status))
-        case ResultSet(df) => Right(df)
-      } catch {
-        case e: GraftException => Left(err(e.code, e.msg))
-        case e: Throwable => Left(err(1105, String.valueOf(e.getMessage)))
-      }
-    payloads match {
-      case Left(p) =>
-        writePacket(out, seqStart, p)
+    def send(seq: Int, p: Array[Byte]): Int = { writePacket(out, seq, p); seq + 1 }
+    def fail(seq: Int, e: Throwable): (Int, Boolean) = {
+      val next = send(seq, e match {
+        case g: GraftException => err(g.code, g.msg)
+        case _ => err(1105, String.valueOf(e.getMessage))
+      })
+      out.flush()
+      (next, true)
+    }
+    val result =
+      try run match {
+        case AffectedRows(n) => Right(Left(n))
+        case ResultSet(df) => Right(Right((df.schema, resultRows(df))))
+      } catch { case e: Throwable => Left(e) }
+    result match {
+      case Left(e) => fail(seqStart, e)
+      case Right(Left(n)) =>
+        val next = send(seqStart, ok(n, 0L, status))
         out.flush()
-        (seqStart + 1, (p(0) & 0xff) == 0xff)
-      case Right(df) =>
-        val schema = df.schema
-        val defs = schema.fields.map { f =>
-          val tc = f.dataType match {
-            case LongType => TypeLongLong
-            case DoubleType => TypeDouble
-            case _ => TypeVarString
-          }
-          columnDef(session.currentSchema.getOrElse(""), "", f.name, tc)
-        }.toSeq
-        var seq = seqStart
-        ((new Writer().lenenc(schema.fields.length.toLong).result() +: defs)
-          :+ eof()).foreach { p => writePacket(out, seq, p); seq += 1 }
-        // stream the rows: toLocalIterator fetches one partition at a
-        // time, so a huge SELECT through the wire never materializes
-        // on the driver. Row execution errors past this point can only
-        // surface as a dropped connection — the defs are already on
-        // the wire, the same failure mode as any streaming server.
-        var rowErr = false
-        try df.toLocalIterator().forEachRemaining { row =>
-          writePacket(out, seq, textRow(schema.fields.indices.map(i =>
-            if (row.isNullAt(i)) None else Some(String.valueOf(row.get(i))))))
-          seq += 1
-        } catch {
-          case e: Throwable =>
-            writePacket(out, seq, err(1105, String.valueOf(e.getMessage)))
-            seq += 1
-            rowErr = true
+        (next, false)
+      case Right(Right((schema, rows))) =>
+        val tcs = schema.fields.map(f => f.dataType match {
+          case LongType => TypeLongLong
+          case DoubleType => TypeDouble
+          case _ => TypeVarString
+        })
+        var seq = send(seqStart, new Writer().lenenc(tcs.length.toLong).result())
+        schema.fields.zip(tcs).foreach { case (f, tc) =>
+          seq = send(seq, columnDef(session.currentSchema.getOrElse(""), "", f.name, tc))
         }
-        writePacket(out, seq, eof(status))
-        out.flush()
-        (seq + 1, rowErr)
+        seq = send(seq, eof())
+        val rowErr =
+          try {
+            rows.foreach { row =>
+              val cells = tcs.indices.map(i =>
+                if (row.isNullAt(i)) None else Some(row.get(i)))
+              seq = send(seq,
+                if (binary) binaryRow(cells.zip(tcs))
+                else textRow(cells.map(_.map(String.valueOf))))
+            }
+            None
+          } catch { case e: Throwable => Some(e) }
+        rowErr.map(fail(seq, _)).getOrElse {
+          seq = send(seq, eof(status))
+          out.flush()
+          (seq, false)
+        }
     }
   }
+
+  /** A result's rows, from the plan its DataFrame already built. A
+    * `LocalTableScanExec` (SHOW, DESCRIBE, EXPLAIN, VALUES) holds its
+    * rows on the driver, and `collect()` returns them with no Spark
+    * job. Any other plan streams through `toLocalIterator()`, one
+    * partition per job, so driver memory stays O(partition), not
+    * O(result). */
+  private def resultRows(df: DataFrame): Iterator[Row] =
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => df.collect().iterator
+      case _ => df.toLocalIterator().asScala
+    }
 }

@@ -50,11 +50,7 @@ final class TextClient(host: String, port: Int,
     val (_, first) = readPacket(in)
     (first(0) & 0xff) match {
       case 0x00 => (Nil, Nil)
-      case 0xff =>
-        val r = new Reader(first); r.int1()
-        val code = r.int2(); r.skip(6)
-        throw new RuntimeException(
-          s"wire error $code: ${new String(r.rest(), StandardCharsets.UTF_8)}")
+      case 0xff => throw error("wire error", first)
       case _ =>
         val n = new Reader(first).lenenc().toInt
         val cols = (0 until n).map { _ =>
@@ -64,15 +60,13 @@ final class TextClient(host: String, port: Int,
           new String(r.lenencBytes(), StandardCharsets.UTF_8)
         }
         readPacket(in) // EOF after column definitions
-        val rows = Iterator.continually(readPacket(in)._2)
-          .takeWhile(p => (p(0) & 0xff) != 0xfe || p.length >= 9)
-          .map { p =>
-            val r = new Reader(p)
-            (0 until n).map { _ =>
-              if (r.peek == 0xfb) { r.skip(1); None }
-              else Some(new String(r.lenencBytes(), StandardCharsets.UTF_8))
-            }
-          }.toVector
+        val rows = rowPackets("wire error").map { p =>
+          val r = new Reader(p)
+          (0 until n).map { _ =>
+            if (r.peek == 0xfb) { r.skip(1); None }
+            else Some(new String(r.lenencBytes(), StandardCharsets.UTF_8))
+          }
+        }
         (cols, rows)
     }
   }
@@ -99,11 +93,7 @@ final class TextClient(host: String, port: Int,
           val status = r.int2()
           acc += ((Nil, Nil))
           more = (status & ServerMoreResultsExists) != 0
-        case 0xff =>
-          val r = new Reader(first); r.int1()
-          val code = r.int2(); r.skip(6)
-          throw new RuntimeException(s"wire error $code: " +
-            new String(r.rest(), StandardCharsets.UTF_8))
+        case 0xff => throw error("wire error", first)
         case _ =>
           val n = new Reader(first).lenenc().toInt
           val cols = (0 until n).map { _ =>
@@ -119,7 +109,8 @@ final class TextClient(host: String, port: Int,
           var rowsDone = false
           while (!rowsDone) {
             val (_, p) = readPacket(in)
-            if ((p(0) & 0xff) == 0xfe && p.length < 9) {
+            if ((p(0) & 0xff) == 0xff) throw error("wire error", p)
+            else if ((p(0) & 0xff) == 0xfe && p.length < 9) {
               val r = new Reader(p)
               r.int1(); r.int2()
               status = r.int2()
@@ -146,12 +137,7 @@ final class TextClient(host: String, port: Int,
       new Writer().int1(ComStmtReset).int4(id.toLong).result())
     out.flush()
     val (_, p) = readPacket(in)
-    if ((p(0) & 0xff) == 0xff) {
-      val r = new Reader(p); r.int1()
-      val code = r.int2(); r.skip(6)
-      throw new RuntimeException(s"reset error $code: " +
-        new String(r.rest(), StandardCharsets.UTF_8))
-    }
+    if ((p(0) & 0xff) == 0xff) throw error("reset error", p)
   }
 
   /** COM_STMT_PREPARE; returns the statement id (column defs are
@@ -162,12 +148,7 @@ final class TextClient(host: String, port: Int,
       .bytes(sql.getBytes(StandardCharsets.UTF_8)).result())
     out.flush()
     val (_, head) = readPacket(in)
-    if ((head(0) & 0xff) == 0xff) {
-      val r = new Reader(head); r.int1()
-      val code = r.int2(); r.skip(6)
-      throw new RuntimeException(
-        s"prepare error $code: ${new String(r.rest(), StandardCharsets.UTF_8)}")
-    }
+    if ((head(0) & 0xff) == 0xff) throw error("prepare error", head)
     val r = new Reader(head)
     require(r.int1() == 0x00, "prepare response header")
     val id = r.int4().toInt
@@ -211,11 +192,7 @@ final class TextClient(host: String, port: Int,
     val (_, first) = readPacket(in)
     (first(0) & 0xff) match {
       case 0x00 => (Nil, Nil)
-      case 0xff =>
-        val r = new Reader(first); r.int1()
-        val code = r.int2(); r.skip(6)
-        throw new RuntimeException(
-          s"execute error $code: ${new String(r.rest(), StandardCharsets.UTF_8)}")
+      case 0xff => throw error("execute error", first)
       case _ =>
         val n = new Reader(first).lenenc().toInt
         val defs = (0 until n).map { _ =>
@@ -230,29 +207,48 @@ final class TextClient(host: String, port: Int,
           (name, typeCode)
         }
         readPacket(in) // EOF after column definitions
-        val rows = Iterator.continually(readPacket(in)._2)
-          .takeWhile(p => (p(0) & 0xff) != 0xfe || p.length >= 9)
-          .map { p =>
-            val r = new Reader(p)
-            require(r.int1() == 0x00, "binary row header")
-            val bitmap = (0 until (n + 7 + 2) / 8).map(_ => r.int1())
-            def isNull(i: Int) = {
-              val bit = i + 2
-              (bitmap(bit / 8) & (1 << (bit % 8))) != 0
+        val rows = rowPackets("execute error").map { p =>
+          val r = new Reader(p)
+          require(r.int1() == 0x00, "binary row header")
+          val bitmap = (0 until (n + 7 + 2) / 8).map(_ => r.int1())
+          def isNull(i: Int) = {
+            val bit = i + 2
+            (bitmap(bit / 8) & (1 << (bit % 8))) != 0
+          }
+          (0 until n).map { i =>
+            if (isNull(i)) None
+            else defs(i)._2 match {
+              case 0x08 => Some(r.int8())
+              case 0x05 =>
+                Some(java.lang.Double.longBitsToDouble(r.int8()))
+              case _ => Some(new String(r.lenencBytes(),
+                StandardCharsets.UTF_8))
             }
-            (0 until n).map { i =>
-              if (isNull(i)) None
-              else defs(i)._2 match {
-                case 0x08 => Some(r.int8())
-                case 0x05 =>
-                  Some(java.lang.Double.longBitsToDouble(r.int8()))
-                case _ => Some(new String(r.lenencBytes(),
-                  StandardCharsets.UTF_8))
-              }
-            }
-          }.toVector
+          }
+        }
         (defs.map(_._1), rows)
     }
+  }
+
+  private def error(what: String, p: Array[Byte]): RuntimeException = {
+    val r = new Reader(p); r.int1()
+    val code = r.int2(); r.skip(6)
+    new RuntimeException(
+      s"$what $code: ${new String(r.rest(), StandardCharsets.UTF_8)}")
+  }
+
+  /** Row packets up to the EOF that ends a result set. A row that
+    * fails mid-stream arrives as an ERR in the EOF's place, and throws
+    * (no row starts with 0xff). */
+  private def rowPackets(what: String): Vector[Array[Byte]] = {
+    val rows = Vector.newBuilder[Array[Byte]]
+    var p = readPacket(in)._2
+    while (!((p(0) & 0xff) == 0xfe && p.length < 9)) {
+      if ((p(0) & 0xff) == 0xff) throw error(what, p)
+      rows += p
+      p = readPacket(in)._2
+    }
+    rows.result()
   }
 
   override def close(): Unit = sock.close()

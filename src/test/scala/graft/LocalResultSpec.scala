@@ -1,0 +1,222 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.engine.GraftEngine
+import graft.wire.{MysqlServer, TextClient}
+
+/** Results whose rows the engine already holds on the driver (SHOW,
+  * DESCRIBE, EXPLAIN, VALUES) reach a wire client with no Spark job,
+  * on the text protocol (COM_QUERY) and the binary one
+  * (COM_STMT_EXECUTE). Each reply keeps the column names, types and
+  * nullability the engine's earlier `Seq[Tuple].toDF(...)` form gave
+  * it: the expected schemas below are built with `toDF` itself. A
+  * SELECT that reads a multi-partition scan still streams, one job per
+  * partition, and returns exactly the rows of `collect()` in order.
+  */
+class LocalResultSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    // keep the ORDER BY result at 4 partitions, so it really streams
+    .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val jobs = new AtomicInteger
+  private lazy val wh = ScratchDirs.create("graft_local_result_")
+  private lazy val eng = new GraftEngine(spark, wh)
+  private lazy val srv = new MysqlServer(eng)
+  private lazy val client = new TextClient("127.0.0.1", srv.boundPort)
+
+  override def beforeAll(): Unit = {
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
+    eng.sql("create schema lr")
+    eng.sql("use lr")
+    eng.sql("create table acct (id int, name char, score float, PRIMARY KEY(id))")
+    eng.sql("insert into acct values (1, 'ann', 1.5), (2, NULL, 2.5)")
+    eng.sql("update acct set score = 3.5 where id = 2")
+    eng.sql("create table audit (code char, n int)")
+    client.query("use lr")
+  }
+
+  override def afterAll(): Unit = {
+    client.close()
+    srv.close()
+    spark.stop()
+  }
+
+  /** Spark jobs started while `f` ran. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    SpecBus.drain(spark.sparkContext)
+    val before = jobs.get
+    val a = f
+    SpecBus.drain(spark.sparkContext)
+    (a, jobs.get - before)
+  }
+
+  private def text(rows: Seq[Row]): Seq[Seq[Option[String]]] =
+    rows.map(_.toSeq.map(v => Option(v).map(String.valueOf)))
+
+  /** Binary rows carry LONGLONG and DOUBLE as numbers, the rest as
+    * strings. */
+  private def binary(rows: Seq[Row]): Seq[Seq[Option[Any]]] =
+    rows.map(_.toSeq.map(v => Option(v).map {
+      case l: Long => l
+      case d: Double => d
+      case other => other.toString
+    }))
+
+  /** The schema `Seq[T].toDF(names: _*)` gives. */
+  private def toDFSchema[T <: Product: scala.reflect.runtime.universe.TypeTag](
+      names: String*): StructType = {
+    val s = spark
+    import s.implicits._
+    Seq.empty[T].toDF(names: _*).schema
+  }
+
+  private val describeRows = Seq(
+    Row("id", "int", "NO", "PRI", "NULL", ""),
+    Row("name", "char", "NO", "", "NULL", ""),
+    Row("score", "float", "NO", "", "NULL", ""))
+
+  /** (statement, schema, expected rows or None when they vary per
+    * call or per session). */
+  private lazy val cases: Seq[(String, StructType, Option[Seq[Row]])] = Seq(
+    ("show tables",
+      toDFSchema[Tuple1[String]]("Tables_in_lr"),
+      Some(Seq(Row("acct"), Row("audit")))),
+    ("show full tables like 'ac%'",
+      toDFSchema[(String, String)]("Tables_in_lr", "Table_type"),
+      Some(Seq(Row("acct", "BASE TABLE")))),
+    ("describe acct",
+      toDFSchema[(String, String, String, String, String, String)](
+        "Field", "Type", "Null", "Key", "Default", "Extra"),
+      Some(describeRows)),
+    ("show columns from acct",
+      toDFSchema[(String, String, String, String, String, String)](
+        "Field", "Type", "Null", "Key", "Default", "Extra"),
+      Some(describeRows)),
+    ("show variables where Variable_name like 'transaction%'",
+      toDFSchema[(String, String)]("Variable_name", "Value"),
+      Some(Seq(Row("transaction_isolation", "REPEATABLE-READ"),
+        Row("transaction_read_only", "0")))),
+    ("show processlist",
+      toDFSchema[(Long, String, String, String, String, Long, String, String)](
+        "Id", "User", "Host", "db", "Command", "Time", "State", "Info"),
+      None),
+    ("show versions for acct",
+      toDFSchema[(Long, String, Long, Long, String)](
+        "Version", "Committed", "Files", "Bytes", "Current"),
+      None),
+    ("explain select id, score from acct where id = 2",
+      toDFSchema[(String, String)]("plan_type", "plan"),
+      None),
+    ("values (1, 'a'), (2, 'b')",
+      StructType(Seq(StructField("col1", IntegerType, nullable = false),
+        StructField("col2", StringType, nullable = false))),
+      Some(Seq(Row(1, "a"), Row(2, "b")))),
+    ("show databases",
+      toDFSchema[Tuple1[String]]("Database"),
+      None),
+    ("show create table acct",
+      toDFSchema[(String, String)]("Table", "Create Table"),
+      None),
+    ("show engines",
+      toDFSchema[(String, String, String, String, String, String)](
+        "Engine", "Support", "Comment", "Transactions", "XA", "Savepoints"),
+      Some(Seq(Row("Parquet", "DEFAULT", "Columnar parquet storage on Spark",
+        "NO", "NO", "NO")))),
+    ("show charset",
+      toDFSchema[(String, String, String, Long)](
+        "Charset", "Description", "Default collation", "Maxlen"),
+      Some(Seq(Row("utf8mb4", "UTF-8 Unicode", "utf8mb4_0900_ai_ci", 4L)))),
+    ("show collation",
+      toDFSchema[(String, String, Long, String, String, Long)](
+        "Collation", "Charset", "Id", "Default", "Compiled", "Sortlen"),
+      Some(Seq(Row("utf8mb4_0900_ai_ci", "utf8mb4", 255L, "Yes", "Yes", 0L)))),
+    ("show grants",
+      toDFSchema[Tuple1[String]]("Grants for root@%"),
+      Some(Seq(Row("GRANT ALL PRIVILEGES ON *.* TO 'root'@'%'")))),
+    ("show privileges",
+      toDFSchema[(String, String, String)]("Privilege", "Context", "Comment"),
+      None),
+    ("show table status",
+      toDFSchema[(String, String, Long)]("Name", "Engine", "Version"),
+      None),
+  )
+
+  test("driver-local results keep the toDF shapes and rows, and reach " +
+    "both protocols with no Spark job") {
+    cases.foreach { case (sql, schema, rows) =>
+      val df = eng.query(sql)
+      assert(df.schema == schema, sql)
+      val got = df.collect().toSeq
+      rows.foreach(want => assert(got == want, sql))
+
+      val ((cols, textRows), textJobs) = jobsDuring(client.query(sql))
+      assert(textJobs == 0, s"text protocol ran $textJobs job(s) for `$sql`")
+      assert(cols == schema.fieldNames.toSeq, sql)
+
+      val (id, _) = client.prepare(sql)
+      val ((bcols, binRows), binJobs) = jobsDuring(client.executeQuery(id, Nil))
+      assert(binJobs == 0, s"binary protocol ran $binJobs job(s) for `$sql`")
+      assert(bcols == schema.fieldNames.toSeq, sql)
+
+      sql match {
+        case "show processlist" =>
+          assert(textRows.nonEmpty && binRows.nonEmpty)
+        case s if s.startsWith("explain") =>
+          assert(textRows.nonEmpty && textRows.forall(_.head.contains("plan")))
+          assert(binRows.length == textRows.length)
+        case _ =>
+          assert(textRows == text(got), sql)
+          assert(binRows == binary(got), sql)
+      }
+    }
+  }
+
+  test("a multi-partition SELECT streams exactly the rows of collect(), " +
+    "in order, on both protocols") {
+    // four files of different sizes: a scan orders its partitions by
+    // file size, so every plan of `big` reads them in the same order
+    val src = s"$wh/stream_src"
+    Seq(0L -> 100L, 100L -> 300L, 300L -> 600L, 600L -> 1000L).foreach {
+      case (lo, hi) =>
+        spark.range(lo, hi, 1, 1)
+          .selectExpr("id",
+            "case when id % 5 = 0 then null else concat('s', id) end as s",
+            "cast(id as double) * 0.5 as x")
+          .write.mode("append").parquet(src)
+    }
+    eng.sql(s"create external table big USING PARQUET LOCATION '$src'")
+    Seq("select id, s, x from big",
+      "select id, s, x from big order by x desc").foreach { sql =>
+      val df = eng.query(sql)
+      val parts = df.queryExecution.toRdd.getNumPartitions
+      assert(parts >= 3, s"`$sql` has $parts partitions")
+      val want = df.collect().toSeq
+      assert(want.length == 1000)
+
+      val ((_, textRows), textJobs) = jobsDuring(client.query(sql))
+      assert(textRows == text(want), sql)
+      assert(textJobs >= parts, s"`$sql` ran $textJobs job(s) for $parts partitions")
+
+      val (id, _) = client.prepare(sql)
+      val ((_, binRows), binJobs) = jobsDuring(client.executeQuery(id, Nil))
+      assert(binRows == binary(want), sql)
+      assert(binJobs >= parts, s"`$sql` ran $binJobs job(s) for $parts partitions")
+    }
+  }
+}

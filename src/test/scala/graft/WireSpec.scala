@@ -143,15 +143,33 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
     case class Err(code: Int, msg: String) extends Resp
     case class Rows(cols: Seq[String], rows: Seq[Seq[Option[String]]]) extends Resp
 
+    private def errOf(p: Array[Byte]): Err = {
+      val r = new Reader(p); r.int1()
+      val code = r.int2(); r.skip(6)
+      Err(code, new String(r.rest(), StandardCharsets.UTF_8))
+    }
+
+    /** Row packets up to the EOF that ends a result set, or the ERR
+      * that takes the EOF's place when a row fails mid-stream. No row
+      * starts with 0xff: not a text row (no length-encoded prefix is
+      * 0xff) and not a binary row (header 0x00). */
+    private def rowPackets(): Either[Err, Seq[Array[Byte]]] = {
+      val acc = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+      var p = readPacket(in)._2
+      while ((p(0) & 0xff) != 0xff && !((p(0) & 0xff) == 0xfe && p.length < 9)) {
+        acc += p
+        p = readPacket(in)._2
+      }
+      if ((p(0) & 0xff) == 0xff) Left(errOf(p)) else Right(acc.toSeq)
+    }
+
+    /** A response; result-set rows are read as text rows. */
     private def readResp(): Resp = {
       val (_, first) = readPacket(in)
       (first(0) & 0xff) match {
         case 0x00 =>
           val r = new Reader(first); r.int1(); Ok(r.lenenc())
-        case 0xff =>
-          val r = new Reader(first); r.int1()
-          val code = r.int2(); r.skip(6)
-          Err(code, new String(r.rest(), StandardCharsets.UTF_8))
+        case 0xff => errOf(first)
         case _ =>
           val n = new Reader(first).lenenc().toInt
           val cols = (0 until n).map { _ =>
@@ -161,16 +179,16 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
             new String(r.lenencBytes(), StandardCharsets.UTF_8) // name
           }
           readPacket(in) // EOF after defs
-          val rows = Iterator.continually(readPacket(in)._2)
-            .takeWhile(p => (p(0) & 0xff) != 0xfe || p.length >= 9)
-            .map { p =>
+          rowPackets() match {
+            case Left(e) => e
+            case Right(ps) => Rows(cols, ps.map { p =>
               val r = new Reader(p)
               (0 until n).map { _ =>
                 if (r.peek == 0xfb) { r.skip(1); None }
                 else Some(new String(r.lenencBytes(), StandardCharsets.UTF_8))
               }
-            }.toSeq
-          Rows(cols, rows)
+            })
+          }
       }
     }
 
@@ -380,7 +398,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
         .result())
 
     /** COM_STMT_EXECUTE for a statement answering OK (INSERT/UPDATE/
-      * DELETE); params as in [[execute]], with [[LongData]] marking a
+      * DELETE) or ERR; params as in [[execute]], with [[LongData]] marking a
       * param whose value was uploaded via COM_STMT_SEND_LONG_DATA
       * (type sent as LONG_BLOB, value OMITTED from the payload). */
     def executeUpdate(id: Int, params: Seq[Any]): Resp = {
@@ -797,6 +815,59 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
       c.query("select v from seeded") match {
         case c.Rows(_, rs) => assert(rs == Seq(Seq(Some("7"))))
         case other => fail(s"$other")
+      }
+      c.quit()
+    } finally srv.close()
+  }
+
+  test("COM_QUERY: a failing statement answers ERR and the connection " +
+    "stays usable") {
+    val wh = ScratchDirs.create("graft_wire9_")
+    val eng = new GraftEngine(spark, wh)
+    eng.sql("create schema fe")
+    eng.sql("use fe")
+    eng.sql("create table t (id int, PRIMARY KEY(id))")
+    eng.sql("insert into t values (1), (2), (3)")
+    val srv = new MysqlServer(eng)
+    try {
+      val c = new Client(srv.boundPort, db = Some("fe"))
+      // a constant division by zero (ANSI mode), then one that fails
+      // only once rows stream from a table scan: ERR either way, in
+      // place of the result set's final EOF
+      Seq("select 1/0", "select id, 1 / (id - id) as q from t").foreach { sql =>
+        c.query(sql) match {
+          case c.Err(code, msg) =>
+            assert(code == 1105 && msg.contains("DIVIDE_BY_ZERO"), sql)
+          case other => fail(s"expected ERR for `$sql`, got $other")
+        }
+        assert(c.query("select id from t order by id") ==
+          c.Rows(Seq("id"), Seq(Seq(Some("1")), Seq(Some("2")), Seq(Some("3")))))
+      }
+      c.quit()
+    } finally srv.close()
+  }
+
+  test("COM_STMT_EXECUTE: a failing statement answers ERR and the " +
+    "connection stays usable") {
+    val wh = ScratchDirs.create("graft_wire10_")
+    val eng = new GraftEngine(spark, wh)
+    eng.sql("create schema fb")
+    eng.sql("use fb")
+    eng.sql("create table t (id int, PRIMARY KEY(id))")
+    eng.sql("insert into t values (1), (2), (3)")
+    val srv = new MysqlServer(eng)
+    try {
+      val c = new Client(srv.boundPort, db = Some("fb"))
+      val (okId, _) = c.prepare("select id from t where id >= ? order by id")
+      Seq("select 1/0", "select id, 1 / (id - id) as q from t").foreach { sql =>
+        val (badId, _) = c.prepare(sql)
+        c.executeUpdate(badId, Nil) match {
+          case c.Err(code, msg) =>
+            assert(code == 1105 && msg.contains("DIVIDE_BY_ZERO"), sql)
+          case other => fail(s"expected ERR for `$sql`, got $other")
+        }
+        assert(c.execute(okId, Seq(2L)) == Seq(Seq(Some(2L)), Seq(Some(3L))))
+        c.stmtClose(badId)
       }
       c.quit()
     } finally srv.close()
