@@ -5,7 +5,15 @@ import json, os, sys, glob, subprocess, collections
 
 def lines(path):
     if path.endswith('.zstd'):
-        p = subprocess.run(['zstd', '-dc', path], capture_output=True)
+        # a missing binary or a truncated frame must fail loudly, not
+        # summarize as all zeros
+        try:
+            p = subprocess.run(['zstd', '-dc', path], capture_output=True)
+        except OSError as e:
+            sys.exit('evlog_summary: cannot run zstd: %s' % e)
+        if p.returncode != 0:
+            sys.exit('evlog_summary: zstd -dc %s failed (exit %d): %s' % (
+                path, p.returncode, p.stderr.decode(errors='replace').strip()))
         for ln in p.stdout.splitlines():
             yield ln
     else:

@@ -160,12 +160,12 @@ object Bench {
     }
     val bySlow = results.sortBy(-_._2)
     val budget = 1200 // chars for the queries map (whole line ≤ ~1.6KB)
-    val kept = new scala.collection.mutable.ArrayBuffer[String]
-    var used = 0
-    bySlow.foreach { case (k, v) =>
-      val frag = "\"" + k + f"""":$v%.3f"""
-      if (used + frag.length + 1 <= budget) { kept += frag; used += frag.length + 1 }
-    }
+    // the longest slowest-first prefix that fits: the first fragment
+    // over budget ends the map, so no faster query with a shorter name
+    // can take the place of a slower one
+    val frags = bySlow.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
+    val kept = frags.zip(frags.scanLeft(0)(_ + _.length + 1).tail)
+      .takeWhile(_._2 <= budget).map(_._1)
     val contract =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${kept.mkString("{", ",", "}")},"sf":"$sfDir","n_queries":${results.size},"omitted":${results.size - kept.size},"detail":"$outPath",$loadJson}"""
     println(contract)

@@ -3,83 +3,45 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Graph
+
 /** Plan dumps for operator pipelines whose PUBLIC entry points
   * materialize eagerly (localCheckpoint) and therefore explain as a
   * useless RDD-scan stub: this main rebuilds the LAZY internal
-  * pipeline the operator runs and dumps its formatted plan — the same
-  * trick PlanSpec uses for its shape pins.
+  * pipeline the operator runs, from the operator's own pieces, and
+  * dumps its formatted plan — the same trick PlanSpec uses for its
+  * shape pins.
   * `runMain graft.PlanDump <name1,name2,...> [sfDir] [outDir]`. */
 object PlanDump {
-  private def lineitemPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.Association.withinGroupPairs(
+  /** The battery's co-purchase graph (p75, p86) as its adjacency. */
+  private def lineitemAdjacency(spark: SparkSession, sfDir: String): DataFrame =
+    Graph.adjacency(graft.operators.Association.withinGroupPairs(
       graft.queries.QueryUtil.tbl(spark, sfDir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-      "o", "p")
+      "o", "p"), "x", "y")
 
   private val pipelines: Map[String, (SparkSession, String) => DataFrame] = Map(
     // p86's scoring pipeline (the public adamicAdarTopK checkpoints)
     "p86_adamic_adar_scored" -> { (s, dir) =>
-      val und = graft.queries.QueryUtil.tbl(s, dir, "lineitem")
-        .select(col("l_orderkey").as("__u"), col("l_partkey").as("__v"))
-        .filter(col("__u") =!= col("__v")).distinct()
-      graft.operators.Graph.adamicAdarScored(und, 64, 50)
+      Graph.adamicAdarScored(lineitemAdjacency(s, dir), 64, 50)
     },
-    // the PRE-r18 kCorePeel round spelling, kept dumpable so the
-    // plan-shape claim (two edge probes + union + re-shuffled touched
-    // stream → one probe on a pre-partitioned adjacency) is checkable
-    // against p75_kcore_round below
-    "p75_kcore_round_old" -> { (s, dir) =>
-      val k = 64
-      val e = lineitemPairs(s, dir).select(
-          least(col("x"), col("y")).as("__u"),
-          greatest(col("x"), col("y")).as("__v"))
-        .filter(col("__u") =!= col("__v"))
-        .distinct()
-      val deg = e.select(explode(array(col("__u"), col("__v"))).as("__n"))
-        .groupBy(col("__n")).agg(count(lit(1)).as("__dg"))
-      val removed = deg.filter(col("__dg") < k).select(col("__n"))
-      val surviving = deg.filter(col("__dg") >= k)
-      val touched = e
-        .join(removed.withColumnRenamed("__n", "__u"), Seq("__u"))
-        .select(col("__v").as("__n"))
-        .union(e
-          .join(removed.withColumnRenamed("__n", "__v"), Seq("__v"))
-          .select(col("__u").as("__n")))
-      val dec = touched.groupBy(col("__n")).agg(count(lit(1)).as("__dc"))
-      surviving.join(dec, Seq("__n"), "left")
-        .select(col("__n"),
-          (col("__dg") - coalesce(col("__dc"), lit(0L))).as("__dg"))
-    },
-    // p75's adjacency build + first peel round, spelled exactly like
-    // kCorePeel's loop body (the loop itself persists per round, so
-    // only the round-0 shape is dumpable without execution)
+    // p75's adjacency build + first peel round (the loop persists per
+    // round, so only the round-1 shape is dumpable without execution)
     "p75_kcore_round" -> { (s, dir) =>
-      val k = 64
-      val adj = lineitemPairs(s, dir).select(
-          least(col("x"), col("y")).as("__u"),
-          greatest(col("x"), col("y")).as("__v"))
-        .filter(col("__u") =!= col("__v"))
-        .distinct()
-        .select(explode(array(
-          struct(col("__u").as("__n"), col("__v").as("__o")),
-          struct(col("__v").as("__n"), col("__u").as("__o")))).as("__e"))
-        .select(col("__e.__n").as("__n"), col("__e.__o").as("__o"))
-        .repartition(col("__n"))
-      val deg = adj.groupBy(col("__n")).agg(count(lit(1)).as("__dg"))
-      val removed = deg.filter(col("__dg") < k).select(col("__n"))
-      val surviving = deg.filter(col("__dg") >= k)
-      val dec = adj.join(removed, Seq("__n"))
-        .groupBy(col("__o")).agg(count(lit(1)).as("__dc"))
-        .select(col("__o").as("__n"), col("__dc"))
-      surviving.join(dec, Seq("__n"), "left")
-        .select(col("__n"),
-          (col("__dg") - coalesce(col("__dc"), lit(0L))).as("__dg"))
+      val nm = lineitemAdjacency(s, dir)
+      Graph.kCoreRound(nm, Graph.degrees(nm), 64)
     })
 
   def main(args: Array[String]): Unit = {
     val names =
       if (args.nonEmpty) args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else pipelines.keys.toSeq.sorted
+    val unknown = names.filterNot(pipelines.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown pipeline(s): ${unknown.mkString(", ")}; " +
+        s"valid names: ${pipelines.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) Some(args(2)) else None
     val spark = SparkSession.builder()

@@ -1,14 +1,90 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Iterative bipartite-graph importance scoring — the crawl-side
-  * quality signal of a training-data pipeline (which items/pages are
-  * authoritative, which actors are good hubs), computed as a
-  * fixed-depth, engine-replayable iteration.
+/** Graph operators over DataFrame edge lists — importance scoring,
+  * reachability, triangles, cores, communities and link prediction —
+  * each a fixed-depth, engine-replayable iteration.
+  *
+  * Caching: every operator runs in ONE cache scope ([[cached]]). A
+  * frame the operator reuses is persisted at MEMORY_AND_DISK and
+  * registered with the scope; the result is materialized eagerly
+  * (`localCheckpoint`) and every registered frame is released in a
+  * `finally`, also when the operator throws. Callers get a
+  * self-contained frame, not a cache-lifecycle obligation.
+  *
+  * Adjacency: the undirected operators ([[triangleCounts]],
+  * [[kCorePeel]], [[labelPropagation]], [[adamicAdarTopK]],
+  * [[modularity]]) read ONE canonical adjacency, built by
+  * [[adjacency]]. Each proper undirected edge — self-loops dropped,
+  * duplicate and reversed copies merged — appears once per
+  * direction as a row `(__n, __m)`, and the frame is
+  * hash-partitioned once on `__n`. Because it is symmetric, a
+  * per-node aggregate groups on `__n` over the cached partitioning
+  * (degrees need no exchange), the `u < v` edge set is
+  * `__n < __m`, and a join on `__n` probes the cached partitions in
+  * place. [[withAdjacency]] persists it in a cache scope and hands it
+  * to its body, so several operators can share one adjacency; that
+  * scope releases it when the body's result is materialized.
   */
 object Graph {
+
+  /** The one cache scope: `body` gets a `keep` that persists a frame
+    * and registers it; the body's result is checkpointed eagerly and
+    * every registered frame is released, whether or not the body
+    * threw. */
+  private def cached(body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val kept = ArrayBuffer.empty[DataFrame]
+    try body { df =>
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      kept += p
+      p
+    }.localCheckpoint(eager = true)
+    finally kept.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The canonical adjacency of `edges` (see the object doc), lazy.
+    * One explode emits both directions of every proper edge (the
+    * caller's edge construction is read once), and ONE exchange both
+    * dedups and partitions them: grouping on `__n` into a neighbour
+    * set keeps the map-side partial dedup of a `distinct`, and
+    * exploding the set back to rows keeps the hash partitioning on
+    * `__n`. Each node's neighbour set is one array while it is built,
+    * as in the per-node neighbour arrays of [[triangleCounts]] and
+    * [[adamicAdarTopK]]. */
+  private[graft] def adjacency(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.filter(col(srcCol) =!= col(dstCol))
+      .select(explode(array(
+        struct(col(srcCol).as("__n"), col(dstCol).as("__m")),
+        struct(col(dstCol).as("__n"), col(srcCol).as("__m")))).as("__e"))
+      .groupBy(col("__e.__n").as("__n"))
+      .agg(collect_set(col("__e.__m")).as("__ms"))
+      .select(col("__n"), explode(col("__ms")).as("__m"))
+
+  /** `(__n, __d)`: every node's degree, grouped on the adjacency's own
+    * partitioning key. */
+  private[graft] def degrees(nm: DataFrame): DataFrame =
+    nm.groupBy(col("__n")).agg(count(lit(1)).as("__d"))
+
+  /** A canonical adjacency persisted by [[withAdjacency]]; valid only
+    * inside the body it is handed to. */
+  final class Adjacency private[Graph] (private[Graph] val nm: DataFrame,
+      private[Graph] val keep: DataFrame => DataFrame)
+
+  /** Builds the canonical adjacency of the undirected edge list
+    * `edges`, persists it and runs `body` over it in one cache scope:
+    * the body's result is materialized eagerly, then the adjacency
+    * and every frame the body's operators persisted are released. */
+  def withAdjacency(edges: DataFrame, srcCol: String, dstCol: String)(
+      body: Adjacency => DataFrame): DataFrame =
+    cached { keep =>
+      body(new Adjacency(keep(adjacency(edges, srcCol, dstCol)), keep))
+    }
 
   /** Fixed-iteration HITS (Kleinberg 1999, "Authoritative sources in
     * a hyperlinked environment") over a bipartite edge list:
@@ -37,22 +113,15 @@ object Graph {
     * the cache each round's two consumers would replay every earlier
     * round — exponential recompute in `rounds`; the per-half-step
     * ancestor of this shape measured 45.7s -> 13.4s at sf0.1 from
-    * exactly this cache). The result is materialized eagerly
-    * (localCheckpoint) so every intermediate cache can be released
-    * before returning — callers get a self-contained frame, not a
-    * cache-lifecycle obligation.
+    * exactly this cache).
     *
     * Returns (dstCol, auth_micro, degree): the authority-side score
     * after `rounds` full iterations plus the in-degree. */
   def hitsMicro(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int = 3): DataFrame = {
+      rounds: Int = 3): DataFrame = cached { keep =>
     require(rounds >= 1, s"rounds $rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .distinct()
-      .persist(lvl)
-    cached += e
+    val e = keep(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
+      .distinct())
     var auth = e.select(col("__d")).distinct()
       .select(col("__d"), lit(1000000L).as("__a"))
     (1 to rounds).foreach { _ =>
@@ -60,10 +129,8 @@ object Graph {
       // authority sum below — no second consumer, no cache, no barrier
       val hub = e.join(auth, "__d").groupBy(col("__s"))
         .agg(sum(col("__a")).as("__h"))
-      val raw = e.join(hub, "__s").groupBy(col("__d"))
-        .agg(sum(col("__h")).as("__a"))
-        .persist(lvl)
-      cached += raw
+      val raw = keep(e.join(hub, "__s").groupBy(col("__d"))
+        .agg(sum(col("__h")).as("__a")))
       val mx = raw.agg(max(col("__a")).as("__mx"))
       auth = raw.crossJoin(broadcast(mx))
         .select(col("__d"),
@@ -71,12 +138,9 @@ object Graph {
             col("__mx").cast("double"), 0).cast("long").as("__a"))
     }
     val deg = e.groupBy(col("__d")).agg(count(lit(1)).as("degree"))
-    val out = auth.join(deg, "__d")
+    auth.join(deg, "__d")
       .select(col("__d").as(dstCol), col("__a").as("auth_micro"),
         col("degree"))
-      .localCheckpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** Fixed-iteration PageRank (Brin-Page 1998) over a directed edge
@@ -99,23 +163,15 @@ object Graph {
     * fixed O(rounds) plan depth. Self-loops are dropped as EDGES (a
     * self-edge is rank leakage, not signal) but their endpoints stay
     * in the node list — a node incident only to self-loops gets
-    * teleport-only rank and out_degree 0, not silence. The result is
-    * materialized eagerly (localCheckpoint) so every intermediate
-    * cache is released before returning.
+    * teleport-only rank and out_degree 0, not silence.
     *
     * Returns (node, pr_micro, out_degree) with out_degree 0 for pure
     * sinks. */
   def pageRankMicro(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int = 3): DataFrame = {
+      rounds: Int = 3): DataFrame = cached { keep =>
     require(rounds >= 1, s"rounds $rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val all = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-    val e = all
-      .filter(col("__s") =!= col("__d"))
-      .distinct()
-      .persist(lvl)
-    cached += e
+    val e = keep(all.filter(col("__s") =!= col("__d")).distinct())
     // node list from the UNFILTERED edges: self-loop-only nodes are
     // real nodes of the graph and must appear in the output. One
     // explode pass, not a two-branch union — the union form read the
@@ -123,19 +179,15 @@ object Graph {
     // twice; persisting the raw pair stream instead was measured
     // WORSE (caching the biggest pre-distinct frame costs more than
     // one replay), so the fix is fewer reads, not a cache
-    val nodes = all
+    val nodes = keep(all
       .select(explode(array(col("__s"), col("__d"))).as("__n"))
-      .distinct()
-      .persist(lvl)
-    cached += nodes
+      .distinct())
     val outdeg = e.groupBy(col("__s").as("__n"))
       .agg(count(lit(1)).as("__od"))
     // node list with out-degree (0 for sinks) feeds every round AND
     // the final projection — persist once
-    val nd = nodes.join(outdeg, Seq("__n"), "left")
-      .select(col("__n"), coalesce(col("__od"), lit(0L)).as("__od"))
-      .persist(lvl)
-    cached += nd
+    val nd = keep(nodes.join(outdeg, Seq("__n"), "left")
+      .select(col("__n"), coalesce(col("__od"), lit(0L)).as("__od")))
     var pr = nd.select(col("__n"), lit(1000000L).as("__pr"))
     (1 to rounds).foreach { _ =>
       val shares = pr.join(nd.filter(col("__od") > 0), Seq("__n"))
@@ -149,20 +201,16 @@ object Graph {
           (lit(150000L) +
             expr("coalesce(__in, 0L) * 85 div 100")).as("__pr"))
     }
-    val out = pr.join(nd, Seq("__n"))
+    pr.join(nd, Seq("__n"))
       .select(col("__n").as("node"), col("__pr").as("pr_micro"),
         col("__od").as("out_degree"))
-      .localCheckpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** Exact triangle counting via degree orientation (the classic
     * O(m^1.5) wedge-check algorithm; Schank-Wagner 2005, also the
     * MapReduce form in Suri-Vassilvitskii 2011 "Counting triangles
-    * and the curse of the last reducer"). The undirected edge set is
-    * canonicalized (least, greatest, self-loops dropped, distinct),
-    * then every edge is oriented from its lower-(degree, id) endpoint
+    * and the curse of the last reducer"). Every edge of the canonical
+    * adjacency is oriented from its lower-(degree, id) endpoint
     * to the higher one — a total acyclic order under which each
     * triangle has exactly ONE wedge vertex, so a wedge self-join on
     * the low endpoint plus one closing-edge semi-join enumerates each
@@ -178,40 +226,28 @@ object Graph {
     * Returns (node, degree, n_triangles) for every node of the
     * undirected graph — including nodes incident only to self-loops,
     * which appear with degree 0 and n_triangles 0 (a self-loop is not
-    * an undirected edge to a neighbor). The result is materialized
-    * eagerly (localCheckpoint) so every intermediate cache is
-    * released before returning. */
+    * an undirected edge to a neighbor); that node list is read from
+    * `edges` itself, since the adjacency has no self-loops. */
   def triangleCounts(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val all = edges.select(
-        least(col(srcCol), col(dstCol)).as("__u"),
-        greatest(col(srcCol), col(dstCol)).as("__v"))
-    val und = all
-      .filter(col("__u") =!= col("__v"))
-      .distinct()
-      .persist(lvl)
-    cached += und
+      dstCol: String): DataFrame = withAdjacency(edges, srcCol, dstCol) { adj =>
+    val und = adj.nm.filter(col("__n") < col("__m"))
+      .select(col("__n").as("__u"), col("__m").as("__v"))
     // every endpoint — self-loop-only nodes included — with the
     // proper-edge degree (0 for self-loop-only nodes). Single explode
-    // pass over the raw stream: the former u-side ∪ v-side union read
+    // pass over the raw stream: a u-side ∪ v-side union would read
     // the caller's whole edge-construction chain twice (persisting the
     // raw pre-distinct pair stream instead measured worse — the cache
-    // write of the biggest frame costs more than one replay)
-    val deg = all
-      .select(explode(array(col("__u"), col("__v"))).as("__n"))
+    // write of the biggest frame costs more than one replay). An edge
+    // with one NULL endpoint counts as a self-loop on the other one.
+    val deg = adj.keep(edges
+      .select(explode(array(least(col(srcCol), col(dstCol)),
+        greatest(col(srcCol), col(dstCol)))).as("__n"))
       .distinct()
-      .join(und
-          .select(explode(array(col("__u"), col("__v"))).as("__n"))
-          .groupBy(col("__n")).agg(count(lit(1)).as("__d0")),
-        Seq("__n"), "left")
-      .select(col("__n"), coalesce(col("__d0"), lit(0L)).as("__deg"))
-      .persist(lvl)
-    cached += deg
+      .join(degrees(adj.nm), Seq("__n"), "left")
+      .select(col("__n"), coalesce(col("__d"), lit(0L)).as("__deg")))
     // orient each edge low-(deg, id) -> high-(deg, id); carry both
     // endpoint degrees so the wedge join's order check is local
-    val oe = und
+    val oe = adj.keep(und
       .join(deg.select(col("__n").as("__u"), col("__deg").as("__du")), Seq("__u"))
       .join(deg.select(col("__n").as("__v"), col("__deg").as("__dv")), Seq("__v"))
       .select(
@@ -221,9 +257,7 @@ object Graph {
           .otherwise(struct(col("__v").as("a"), col("__u").as("b"),
             col("__du").as("db"))).as("__o"))
       .select(col("__o.a").as("__a"), col("__o.b").as("__b"),
-        col("__o.db").as("__db"))
-      .persist(lvl)
-    cached += oe
+        col("__o.db").as("__db")))
     // Edge-iterator closure (the out-neighborhood-intersection form
     // of the same oriented algorithm): triangle {a,b,c} with a the
     // lowest-rank vertex closes exactly when c ∈ N⁺(a) ∩ N⁺(b) for
@@ -236,16 +270,14 @@ object Graph {
     // only exchanges are the O(m) adjacency groupBy and the two O(m)
     // edge⋈adjacency hash joins. Rows that survive carry only real
     // triangles, so downstream volume is O(#triangles), not wedges.
-    val adj = oe.groupBy(col("__a"))
-      .agg(collect_list(col("__b")).as("__ns"))
-      .persist(lvl)
-    cached += adj
+    val outNbrs = adj.keep(oe.groupBy(col("__a"))
+      .agg(collect_list(col("__b")).as("__ns")))
     // hash joins, never sort-merge: sorting rows that carry the
     // adjacency arrays would move/compare the array payloads; hashing
     // only touches the key
     val withNs = oe.select(col("__a"), col("__b"))
-      .join(adj.hint("shuffle_hash"), Seq("__a"))
-      .join(adj.select(col("__a").as("__b"), col("__ns").as("__nsb"))
+      .join(outNbrs.hint("shuffle_hash"), Seq("__a"))
+      .join(outNbrs.select(col("__a").as("__b"), col("__ns").as("__nsb"))
           .hint("shuffle_hash"),
         Seq("__b"), "left")
       // a null __nsb means b has no out-edges — nothing can close
@@ -267,12 +299,9 @@ object Graph {
           .stripMargin)).as("__cr"))
       .groupBy(col("__cr.n").as("__n"))
       .agg(sum(col("__cr.c")).as("n_triangles"))
-    val out = deg.join(perNode, Seq("__n"), "left")
+    deg.join(perNode, Seq("__n"), "left")
       .select(col("__n").as("node"), col("__deg").as("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-      .localCheckpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** Multi-source breadth-first reachability: the minimum hop count
@@ -300,138 +329,88 @@ object Graph {
     * never changes a BFS distance).
     *
     * Returns (node, hops): every node reachable in ≤ `maxHops` hops,
-    * seeds included at hops 0. The result is materialized eagerly
-    * (localCheckpoint) so every per-level cache is released before
-    * returning. */
+    * seeds included at hops 0. */
   def reachability(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = cached { keep =>
     require(maxHops >= 1, s"maxHops $maxHops must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
+    val e = keep(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
       .filter(col("__s") =!= col("__d"))
-      .distinct()
-      .persist(lvl)
-    cached += e
-    val level0 = seeds.select(col(seedCol).as("__n")).distinct()
-      .select(col("__n"), lit(0L).as("__h"))
-      .persist(lvl)
-    cached += level0
+      .distinct())
+    val level0 = keep(seeds.select(col(seedCol).as("__n")).distinct()
+      .select(col("__n"), lit(0L).as("__h")))
     var visited = level0
     var frontier: DataFrame = level0.select(col("__n"))
     (1 to maxHops).foreach { h =>
-      val next = e.join(frontier.withColumnRenamed("__n", "__s"), Seq("__s"))
+      val next = keep(e.join(frontier.withColumnRenamed("__n", "__s"), Seq("__s"))
         .select(col("__d").as("__n"))
         .distinct()
         .join(visited.select(col("__n")), Seq("__n"), "left_anti")
-        .select(col("__n"), lit(h.toLong).as("__h"))
-        .persist(lvl)
-      cached += next
+        .select(col("__n"), lit(h.toLong).as("__h")))
       visited = visited.union(next)
       frontier = next.select(col("__n"))
     }
-    val out = visited
-      .select(col("__n").as("node"), col("__h").as("hops"))
-      .localCheckpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
+    visited.select(col("__n").as("node"), col("__h").as("hops"))
   }
 
   /** Fixed-round k-core peel (Seidman 1983 "Network structure and
     * minimum degree"; the distributed peel loop of Montresor et al.
     * 2013): repeatedly delete every node whose degree in the
-    * CURRENT surviving subgraph is below `k`, `rounds` times, over
-    * the canonical undirected edge set (least/greatest, self-loops
-    * dropped, distinct). The k-core is the standard graph-curation
-    * gate — peripheral low-connectivity nodes (drive-by link spam,
-    * single-interaction users) peel away while the dense core
-    * survives. A fixed round count keeps the trajectory
-    * engine-replayable (each round is a pure function of the
-    * previous subgraph); on graphs whose peel converges faster the
-    * extra rounds are cheap fixpoint no-ops.
+    * CURRENT surviving subgraph is below `k`, `rounds` times. The
+    * k-core is the standard graph-curation gate — peripheral
+    * low-connectivity nodes (drive-by link spam, single-interaction
+    * users) peel away while the dense core survives. A fixed round
+    * count keeps the trajectory engine-replayable (each round is a
+    * pure function of the previous subgraph); on graphs whose peel
+    * converges faster the extra rounds are cheap fixpoint no-ops.
     *
-    * Scale shape: the symmetrized adjacency (one row per edge
-    * DIRECTION, built by a single explode pass over the canonical
-    * edge set — the caller's whole edge construction is read once) is
-    * cached ONCE, hash-partitioned on the decrement key, and never
-    * refiltered or reshuffled — each round works on the DELTA. The
-    * just-removed node set (small after round 1; peeling converges
-    * geometrically on real degree distributions) joins the cached
-    * adjacency to count, per surviving neighbor, how many incident
-    * edges just died, and the degree frame is updated by
-    * subtraction. So a round costs ONE probe-scan of the cached
-    * adjacency against a (typically broadcast) removed set plus one
-    * small aggregate — and because the cache is pre-partitioned on
-    * the grouped column, the per-round decrement count needs no
-    * exchange at all: only node-sized frames move. (The previous
-    * spelling probed a half-sized edge cache TWICE — one join per
-    * endpoint column — and re-shuffled the touched stream every
-    * round; the first formulation before that paid 3 edge shuffles +
-    * an edge-sized cache write per round: 23.8s at sf0.1 vs ~4s.)
-    * The decrement bookkeeping is exact: every edge decrements its
-    * surviving endpoint exactly once, in the round its first
-    * endpoint dies (both-die-same-round edges decrement nobody),
-    * which is precisely "degree within the current surviving
-    * subgraph". No driver action in the loop.
+    * Scale shape: the cached adjacency is never refiltered or
+    * reshuffled — each round works on the DELTA. The just-removed
+    * node set (small after round 1; peeling converges geometrically
+    * on real degree distributions) probes the adjacency on `__n` (the
+    * dying endpoint) to count, per surviving neighbour `__m`, how
+    * many incident edges just died, and the degree frame is updated
+    * by subtraction. Whatever strategy the planner picks for that
+    * join — broadcast locally, shuffle-hash when a real graph's
+    * round-1 removed set is too big to broadcast — the adjacency
+    * side never re-exchanges; only node-sized frames move, and the
+    * one per-round exchange is the decrement count's node-sized
+    * regroup onto `__m`. (The previous spelling probed a half-sized
+    * edge cache TWICE — one join per endpoint column — and
+    * re-shuffled the touched stream every round; the first
+    * formulation before that paid 3 edge shuffles + an edge-sized
+    * cache write per round: 23.8s at sf0.1 vs ~4s.) The decrement
+    * bookkeeping is exact: every edge decrements its surviving
+    * endpoint exactly once, in the round its first endpoint dies
+    * (both-die-same-round edges decrement nobody), which is
+    * precisely "degree within the current surviving subgraph". No
+    * Spark action runs inside the loop.
     *
     * Returns (node, degree): the nodes still incident to an edge
     * after `rounds` peels, with their degree inside the peeled
     * subgraph. */
-  def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int): DataFrame = {
+  def kCorePeel(adj: Adjacency, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k $k must be >= 1")
     require(rounds >= 1, s"rounds $rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // symmetrized adjacency: (__n = dying-endpoint probe key,
-    // __o = surviving neighbor credited with the decrement),
-    // pre-partitioned ONCE on the per-round JOIN key __n (the LPA
-    // partitioning discipline): whatever strategy the planner picks
-    // for the removed-set join — broadcast locally, shuffle-hash when
-    // a real graph's round-1 removed set is too big to broadcast —
-    // the adjacency side never re-exchanges; at most the node-sized
-    // removed frame moves. Degrees fall out of the same partitioning
-    // for free (each edge contributes one row per direction, so
-    // counting rows per __n IS the degree, grouped on the cached
-    // partitioning key — no exchange). The only per-round exchange
-    // left is the decrement count's node-sized partial-aggregate
-    // regroup onto __o, which is a genuinely different key.
-    val adj = edges.select(
-        least(col(srcCol), col(dstCol)).as("__u"),
-        greatest(col(srcCol), col(dstCol)).as("__v"))
-      .filter(col("__u") =!= col("__v"))
-      .distinct()
-      .select(explode(array(
-        struct(col("__u").as("__n"), col("__v").as("__o")),
-        struct(col("__v").as("__n"), col("__u").as("__o")))).as("__e"))
-      .select(col("__e.__n").as("__n"), col("__e.__o").as("__o"))
-      .repartition(col("__n"))
-      .persist(lvl)
-    cached += adj
-    var deg = adj.groupBy(col("__n")).agg(count(lit(1)).as("__dg"))
-      .persist(lvl)
-    cached += deg
-    (1 to rounds).foreach { _ =>
-      val removed = deg.filter(col("__dg") < k).select(col("__n"))
-      val surviving = deg.filter(col("__dg") >= k)
-      // every adjacency row whose __n endpoint just died credits its
-      // __o endpoint; endpoints that also died this round fall out of
-      // the left join against the surviving frame below
-      val dec = adj.join(removed, Seq("__n"))
-        .groupBy(col("__o")).agg(count(lit(1)).as("__dc"))
-        .select(col("__o").as("__n"), col("__dc"))
-      val next = surviving.join(dec, Seq("__n"), "left")
-        .select(col("__n"),
-          (col("__dg") - coalesce(col("__dc"), lit(0L))).as("__dg"))
-        .persist(lvl)
-      cached += next
-      deg = next
-    }
-    val out = deg.filter(col("__dg") > 0)
-      .select(col("__n").as("node"), col("__dg").as("degree"))
-      .localCheckpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
+    var deg = adj.keep(degrees(adj.nm))
+    (1 to rounds).foreach { _ => deg = adj.keep(kCoreRound(adj.nm, deg, k)) }
+    deg.filter(col("__d") > 0)
+      .select(col("__n").as("node"), col("__d").as("degree"))
+  }
+
+  /** One peel round of [[kCorePeel]]: the `(__n, __d)` degrees after
+    * dropping every node of `deg` below `k` from the adjacency `nm`. */
+  private[graft] def kCoreRound(nm: DataFrame, deg: DataFrame,
+      k: Int): DataFrame = {
+    val removed = deg.filter(col("__d") < k).select(col("__n"))
+    // every adjacency row whose __n endpoint just died credits its
+    // __m endpoint; endpoints that also died this round fall out of
+    // the left join against the surviving frame below
+    val dec = nm.join(removed, Seq("__n"))
+      .groupBy(col("__m")).agg(count(lit(1)).as("__dc"))
+      .select(col("__m").as("__n"), col("__dc"))
+    deg.filter(col("__d") >= k).join(dec, Seq("__n"), "left")
+      .select(col("__n"),
+        (col("__d") - coalesce(col("__dc"), lit(0L))).as("__d"))
   }
 
   /** Bounded-hop weighted shortest paths from a seed set — the
@@ -469,39 +448,26 @@ object Graph {
     * seed never improves below 0). */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, seeds: DataFrame, seedCol: String,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = cached { keep =>
     require(rounds >= 1, s"rounds $rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
+    val e = keep(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
         col(weightCol).cast("long").as("__w"))
       .filter(col("__s") =!= col("__d"))
       .filter(col("__w") >= 0) // negative weights break bounded-hop minimality
-      .groupBy(col("__s"), col("__d")).agg(min(col("__w")).as("__w"))
-      .persist(lvl)
-    cached += e
-    var dist = seeds.select(col(seedCol).as("__n")).distinct()
-      .select(col("__n"), lit(0L).as("__dist"))
-      .persist(lvl)
-    cached += dist
+      .groupBy(col("__s"), col("__d")).agg(min(col("__w")).as("__w")))
+    var dist = keep(seeds.select(col(seedCol).as("__n")).distinct()
+      .select(col("__n"), lit(0L).as("__dist")))
     (1 to rounds).foreach { _ =>
       val cand = e.join(dist.withColumnRenamed("__n", "__s"), Seq("__s"))
         .select(col("__d").as("__n"), (col("__dist") + col("__w")).as("__dist"))
-      val next = dist.unionByName(cand)
-        .groupBy(col("__n")).agg(min(col("__dist")).as("__dist"))
-        .persist(lvl)
-      cached += next
-      dist = next
+      dist = keep(dist.unionByName(cand)
+        .groupBy(col("__n")).agg(min(col("__dist")).as("__dist")))
     }
-    val out = dist
-      .select(col("__n").as("node"), col("__dist").as("dist"))
-      .localCheckpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
+    dist.select(col("__n").as("node"), col("__dist").as("dist"))
   }
 
   /** Synchronous label propagation (Raghavan, Albert & Kumara 2007)
-    * for community detection over an undirected edge list — the
+    * for community detection over an undirected graph — the
     * cluster-discovery step beyond [[graft.operators.Dedup]]'s
     * connected components: components glue anything that touches,
     * LPA splits dense regions from incidental bridges, which is what
@@ -516,74 +482,42 @@ object Graph {
     * LPA may oscillate; a fixed budget is the standard practice and
     * keeps plan depth bounded).
     *
-    * Scale shape per round: one edge-sized equi-join (labels onto
-    * symmetrized edges) + one partial-combined (node, label) count +
-    * one bounded argmax heap per node ([[TopK.topK]](1)) — no
-    * all-pairs anything; labels persist per round and the loop runs
-    * no driver actions. Returns (node, label). */
-  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int): DataFrame = {
+    * Scale shape per round: one equi-join of the node-sized labels
+    * onto the cached adjacency + one partial-combined (node, label)
+    * count + one struct-max argmax per node — no all-pairs anything;
+    * labels persist per round and the loop runs no Spark actions.
+    * Returns (node, label). */
+  def labelPropagation(adj: Adjacency, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds $rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // symmetrized adjacency: one row per (node, neighbor) direction,
-    // generated by a single explode so the canonical edge set — and
-    // the caller's whole edge-construction chain above it — is read
-    // ONCE (the former two-branch union replayed the unpersisted
-    // distinct+pair-explode per direction)
-    val adj = edges.select(
-        least(col(srcCol), col(dstCol)).as("__u"),
-        greatest(col(srcCol), col(dstCol)).as("__v"))
-      .filter(col("__u") =!= col("__v"))
-      .distinct()
-    val nbrs = adj.select(explode(array(
-        struct(col("__u").as("__n"), col("__v").as("__m")),
-        struct(col("__v").as("__n"), col("__u").as("__m")))).as("__e"))
-      .select(col("__e.__n").as("__n"), col("__e.__m").as("__m"))
-      // pre-partition ONCE on the per-round join key: every round
-      // joins labels on __m, and an unpartitioned cache re-exchanged
-      // the full edge list per round (rounds × edge-sized shuffles —
-      // the dominant 100× cost). The cached hash partitioning on __m
-      // satisfies EnsureRequirements in each round's join, so only
-      // the label side (node-sized) moves.
-      .repartition(col("__m"))
-      .persist(lvl)
-    cached += nbrs
-    var labels = nbrs.select(col("__n")).distinct()
-      .select(col("__n"), col("__n").as("__l"))
-      .persist(lvl)
-    cached += labels
+    var labels = adj.keep(adj.nm.select(col("__n")).distinct()
+      .select(col("__n"), col("__n").as("__l")))
     (1 to rounds).foreach { _ =>
-      // shuffle-hash, not sort-merge: SMJ would SORT the cached edge
-      // list by __m every round (the partitioning is cached, the sort
+      // labels join on the adjacency's partitioning key __n, so only
+      // the node-sized label side moves; by symmetry, grouping on the
+      // other endpoint __m counts each node's NEIGHBOUR labels.
+      // Shuffle-hash, not sort-merge: SMJ would SORT the cached edge
+      // list by __n every round (the partitioning is cached, the sort
       // order is not); SHJ streams the cached partitions and builds
       // on the node-sized label side — the p65 hint discipline
-      val nbrLabels = nbrs
-        .join(labels.withColumnRenamed("__n", "__m").hint("shuffle_hash"),
-          Seq("__m"))
-        .groupBy(col("__n"), col("__l"))
+      val nbrLabels = adj.nm
+        .join(labels.hint("shuffle_hash"), Seq("__n"))
+        .groupBy(col("__m"), col("__l"))
         .agg(count(lit(1)).as("__c"))
       // argmax by (count desc, label asc), EXACT at any count: one
       // struct max — max(struct(count, -label)) picks the highest
       // count and, within it, the smallest label, in a single
       // partial-combined aggregate (integer comparisons, no windows,
       // no float encoding)
-      val next = nbrLabels
-        .groupBy(col("__n"))
+      labels = adj.keep(nbrLabels
+        .groupBy(col("__m"))
         .agg(max(struct(col("__c"), (-col("__l")).as("__nl"))).as("__t"))
-        .select(col("__n"), (-col("__t")("__nl")).as("__l"))
-        .persist(lvl)
-      cached += next
-      labels = next
+        .select(col("__m").as("__n"), (-col("__t")("__nl")).as("__l")))
     }
-    val out = labels.select(col("__n").as("node"), col("__l").as("label"))
-      .localCheckpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
+    labels.select(col("__n").as("node"), col("__l").as("label"))
   }
 
   /** Adamic–Adar link prediction (Adamic & Adar 2003, "Friends and
-    * neighbors on the Web") over an undirected edge list: score every
+    * neighbors on the Web") over an undirected graph: score every
     * NON-adjacent candidate pair (u,v) by Σ_{w ∈ N(u)∩N(v)} 1/ln d(w)
     * — common neighbors, discounted by how promiscuous each shared
     * neighbor is — and return the `topK` highest-scoring pairs. On a
@@ -616,34 +550,19 @@ object Graph {
     *
     * Returns (u, v, common_neighbors, aa_micro), the topK non-edges
     * by (aa_micro desc, u, v). */
-  def adamicAdarTopK(edges: DataFrame, srcCol: String, dstCol: String,
-      maxDegree: Int = 64, topK: Int = 50): DataFrame = {
+  def adamicAdarTopK(adj: Adjacency, maxDegree: Int = 64,
+      topK: Int = 50): DataFrame = adamicAdarScored(adj.nm, maxDegree, topK)
+
+  /** The scoring pipeline of [[adamicAdarTopK]] over an adjacency
+    * frame `nm` — split out so PlanSpec can pin the physical shape
+    * over a lazily built adjacency. */
+  private[graft] def adamicAdarScored(nm: DataFrame, maxDegree: Int,
+      topK: Int): DataFrame = {
     require(maxDegree >= 2, s"maxDegree $maxDegree must be >= 2")
     require(topK >= 1, s"topK $topK must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).as("__u"),
-        greatest(col(srcCol), col(dstCol)).as("__v"))
-      .filter(col("__u") =!= col("__v"))
-      .distinct()
-      .persist(lvl)
-    val out = adamicAdarScored(und, maxDegree, topK)
-      .localCheckpoint(eager = true)
-    und.unpersist(blocking = false)
-    out
-  }
-
-  /** The lazy scoring pipeline of [[adamicAdarTopK]] over an already
-    * canonicalized proper undirected edge frame `(__u < __v)` —
-    * split out so PlanSpec can pin the physical shape (the public
-    * method eagerly materializes, hiding the plan behind an RDD
-    * scan). */
-  private[graft] def adamicAdarScored(und: DataFrame, maxDegree: Int,
-      topK: Int): DataFrame = {
-    val nbrs = und.select(col("__u").as("__n"), col("__v").as("__m"))
-      .unionAll(und.select(col("__v").as("__n"), col("__u").as("__m")))
-    // one row per eligible middle: sorted neighbor array + micro-weight
-    val mids = nbrs.groupBy(col("__n"))
+    // one row per eligible middle: sorted neighbor array + micro-weight,
+    // grouped on the adjacency's partitioning key
+    val mids = nm.groupBy(col("__n"))
       .agg(sort_array(collect_list(col("__m"))).as("__ns"))
       .filter(size(col("__ns")).between(2, maxDegree))
       .select(col("__ns"),
@@ -661,7 +580,8 @@ object Graph {
       .groupBy(col("__p.x").as("u"), col("__p.y").as("v"))
       .agg(count(lit(1)).as("common_neighbors"),
         sum(col("__w")).as("aa_micro"))
-      .join(und.select(col("__u").as("u"), col("__v").as("v")),
+      .join(nm.filter(col("__n") < col("__m"))
+          .select(col("__n").as("u"), col("__m").as("v")),
         Seq("u", "v"), "left_anti")
       .orderBy(col("aa_micro").desc, col("u"), col("v"))
       .limit(topK)
@@ -677,55 +597,44 @@ object Graph {
     * products so a billion-edge graph cannot overflow — with ONE
     * double divide rounded to micro units at the very end.
     *
-    * Scale shape: degrees are one edge-sized aggregate; intra-edge
-    * counts are two node-keyed hash joins of the edge list onto the
-    * label table, then label-grain aggregates; m broadcasts as a
-    * single row. Nothing is ever node×node. The canonical edge set
-    * persists across its three consumers (m, degrees, intra-edge
-    * join) — without the cache each consumer replays the caller's
-    * whole edge-construction chain (for the battery's co-purchase
-    * graph that is the full C(k,2) basket pair explode, three times
-    * over; measured 13.4s → 9.5s at sf0.1 from this cache alone).
-    * The result is label-grain and materializes eagerly
-    * (localCheckpoint) so the cache is released before returning.
+    * Scale shape: degrees group on the adjacency's partitioning
+    * (no exchange); intra-edge counts are two node-keyed hash joins
+    * of the `u < v` edges onto the label table, then label-grain
+    * aggregates; m broadcasts as a single row. Nothing is ever
+    * node×node. All three consumers (m, degrees, intra-edge join)
+    * read the one cached adjacency — without a cache each would
+    * replay the caller's whole edge-construction chain (for the
+    * battery's co-purchase graph that is the full C(k,2) basket pair
+    * explode, three times over; measured 13.4s → 9.5s at sf0.1 from
+    * that cache alone).
     *
     * Returns (label, n_nodes, intra_edges, sum_degree,
     * contribution_micro) by label. */
-  def modularity(edges: DataFrame, srcCol: String, dstCol: String,
-      labels: DataFrame, nodeCol: String, labelCol: String): DataFrame = {
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).as("__u"),
-        greatest(col(srcCol), col(dstCol)).as("__v"))
-      .filter(col("__u") =!= col("__v"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def modularity(adj: Adjacency, labels: DataFrame, nodeCol: String,
+      labelCol: String): DataFrame = {
+    val und = adj.nm.filter(col("__n") < col("__m"))
     val lab = labels.select(col(nodeCol).as("__n"),
       col(labelCol).as("__l"))
-    val m = und.agg(count(lit(1)).cast("decimal(38,0)").as("__m"))
-    val deg = und.select(col("__u").as("__n"))
-      .unionAll(und.select(col("__v").as("__n")))
-      .groupBy(col("__n")).agg(count(lit(1)).as("__d"))
+    val m = und.agg(count(lit(1)).cast("decimal(38,0)").as("__edges"))
+    val deg = degrees(adj.nm)
     val perLabel = deg.join(lab, Seq("__n"))
       .groupBy(col("__l"))
       .agg(count(lit(1)).as("n_nodes"),
         sum(col("__d")).as("sum_degree"))
     val intra = und
-      .join(lab.toDF("__u", "__lu"), Seq("__u"))
-      .join(lab.toDF("__v", "__lv"), Seq("__v"))
+      .join(lab.toDF("__n", "__lu"), Seq("__n"))
+      .join(lab.toDF("__m", "__lv"), Seq("__m"))
       .filter(col("__lu") === col("__lv"))
       .groupBy(col("__lu").as("__l"))
       .agg(count(lit(1)).as("intra_edges"))
-    val out = perLabel.join(intra, Seq("__l"), "left")
+    perLabel.join(intra, Seq("__l"), "left")
       .crossJoin(broadcast(m))
       .select(col("__l").as("label"), col("n_nodes"),
         coalesce(col("intra_edges"), lit(0L)).as("intra_edges"),
         col("sum_degree"),
-        round(expr("CAST(4 * __m * CAST(coalesce(intra_edges, 0) AS " +
+        round(expr("CAST(4 * __edges * CAST(coalesce(intra_edges, 0) AS " +
           "DECIMAL(38,0)) - CAST(sum_degree AS DECIMAL(38,0)) * " +
-          "sum_degree AS DOUBLE) / CAST(4 * __m * __m AS DOUBLE)") *
+          "sum_degree AS DOUBLE) / CAST(4 * __edges * __edges AS DOUBLE)") *
           lit(1000000.0), 0).cast("long").as("contribution_micro"))
-      .localCheckpoint(eager = true)
-    und.unpersist(blocking = false)
-    out
   }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Association, Curation, Dedup, MultiModal,
+import graft.operators.{Association, Curation, Dedup, Graph, MultiModal,
   Retrieval, Sampling, Similarity, Sketches, TextAnalysis}
 import QueryUtil._
 
@@ -2081,8 +2081,7 @@ object Pipeline {
               org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
               .getField("k").as("item"))
           .filter(col("item").isNotNull)
-        graft.operators.Graph.hitsMicro(edges, "user_id", "item",
-            rounds = 3)
+        Graph.hitsMicro(edges, "user_id", "item", rounds = 3)
           .orderBy(col("item"))
       },
       Some("""WITH e AS (SELECT DISTINCT user_id AS s,
@@ -2131,8 +2130,7 @@ object Pipeline {
               org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
               .getField("k").as("item"))
           .filter(col("item").isNotNull)
-        graft.operators.Graph.pageRankMicro(edges, "user_id", "item",
-            rounds = 3)
+        Graph.pageRankMicro(edges, "user_id", "item", rounds = 3)
           .orderBy(col("node"))
       },
       Some("""WITH ae AS (SELECT DISTINCT user_id AS s,
@@ -2183,7 +2181,7 @@ object Pipeline {
           tbl(s, dir, "lineitem")
             .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
           "o", "p")
-        graft.operators.Graph.triangleCounts(pairs, "x", "y")
+        Graph.triangleCounts(pairs, "x", "y")
           .orderBy(col("node"))
       },
       Some("""WITH pe AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
@@ -2572,7 +2570,7 @@ object Pipeline {
           .filter((col("user_id") * 7 + col("item")) % 13 < 2)
         val nodes = raw.select(col("user_id").as("n"))
           .union(raw.select(col("item").as("n"))).distinct()
-        graft.operators.Graph.reachability(raw, "user_id", "item",
+        Graph.reachability(raw, "user_id", "item",
             nodes.filter(col("n") % 53 === 0), "n", maxHops = 4)
           .orderBy(col("node"))
       },
@@ -2608,7 +2606,8 @@ object Pipeline {
           tbl(s, dir, "lineitem")
             .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
           "o", "p")
-        graft.operators.Graph.kCorePeel(pairs, "x", "y", k = 64, rounds = 4)
+        Graph.withAdjacency(pairs, "x", "y")(
+            Graph.kCorePeel(_, k = 64, rounds = 4))
           .orderBy(col("node"))
       },
       Some("""WITH pe AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -2903,7 +2902,8 @@ object Pipeline {
           tbl(s, dir, "lineitem")
             .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
           "o", "p")
-        graft.operators.Graph.labelPropagation(pairs, "x", "y", rounds = 3)
+        Graph.withAdjacency(pairs, "x", "y")(
+            Graph.labelPropagation(_, rounds = 3))
           .groupBy(col("label"))
           .agg(count(lit(1)).as("size"), min(col("node")).as("min_node"))
           .orderBy(col("label"))
@@ -2955,8 +2955,8 @@ object Pipeline {
           tbl(s, dir, "lineitem")
             .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
           "o", "p")
-        graft.operators.Graph.adamicAdarTopK(
-          pairs, "x", "y", maxDegree = 64, topK = 50)
+        Graph.withAdjacency(pairs, "x", "y")(
+            Graph.adamicAdarTopK(_, maxDegree = 64, topK = 50))
       },
       Some("""WITH pe AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |e0 AS MATERIALIZED (SELECT DISTINCT a.p AS u, b.p AS v
@@ -3268,7 +3268,7 @@ object Pipeline {
           .withColumn("w", lit(1) + (col("user_id") + lit(2) * col("item")) % 7)
         val nodes = raw.select(col("user_id").as("n"))
           .union(raw.select(col("item").as("n"))).distinct()
-        graft.operators.Graph.shortestPaths(raw, "user_id", "item", "w",
+        Graph.shortestPaths(raw, "user_id", "item", "w",
             nodes.filter(col("n") % 53 === 0), "n", rounds = 4)
           .orderBy(col("node"))
       },
@@ -3974,23 +3974,16 @@ object Pipeline {
     // plus the degree/intra-edge aggregates.
     "p116_modularity" -> Q(
       (s, dir) => {
-        // the C(k,2) basket explode feeds BOTH the LPA chain and
-        // modularity's edge set — persist it so the dominant build
-        // runs once, not twice. Both consumers materialize eagerly
-        // (localCheckpoint) during construction, so the cache is
-        // safely released before the entry returns.
+        // the LPA chain and modularity read ONE adjacency, so the
+        // C(k,2) basket explode and its dedup run once
         val pairs = Association.withinGroupPairs(
           tbl(s, dir, "lineitem")
             .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
           "o", "p")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val labels = graft.operators.Graph.labelPropagation(
-          pairs, "x", "y", rounds = 3)
-        val out = graft.operators.Graph.modularity(pairs, "x", "y",
-            labels, "node", "label")
-          .orderBy(col("label"))
-        pairs.unpersist(blocking = false)
-        out
+        Graph.withAdjacency(pairs, "x", "y") { adj =>
+          Graph.modularity(adj, Graph.labelPropagation(adj, rounds = 3),
+            "node", "label")
+        }.orderBy(col("label"))
       },
       Some(s"""WITH $duckCoPurchaseLp3,
         |m AS (SELECT CAST(count(*) AS HUGEINT) AS m FROM e0),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.operators.{Dedup, Ratings, Similarity}
+import graft.operators.{Dedup, Graph, Ratings, Similarity}
 
 /** Pins the r17 unpersist discipline (r16 verdict item 3): every
   * operator that persists an intermediate must release it before
@@ -105,6 +105,41 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
         vecs.withColumn("label", (col("vec_id") % 2).cast("int")),
         "vec_id", "embedding", "label")
     }
+  }
+
+  test("graph operators release every cache, also when they throw") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 4L))
+      .toDF("s", "d")
+    val seeds = Seq(1L).toDF("n")
+    assertClean("hitsMicro")(Graph.hitsMicro(edges, "s", "d"))
+    assertClean("pageRankMicro")(Graph.pageRankMicro(edges, "s", "d"))
+    assertClean("triangleCounts")(Graph.triangleCounts(edges, "s", "d"))
+    assertClean("reachability") {
+      Graph.reachability(edges, "s", "d", seeds, "n", maxHops = 2)
+    }
+    assertClean("shortestPaths") {
+      Graph.shortestPaths(edges.withColumn("w", lit(1L)), "s", "d", "w",
+        seeds, "n", rounds = 2)
+    }
+    assertClean("adjacency operators") {
+      Graph.withAdjacency(edges, "s", "d") { adj =>
+        Graph.kCorePeel(adj, k = 2, rounds = 2).count()
+        Graph.adamicAdarTopK(adj, maxDegree = 8, topK = 5).count()
+        Graph.modularity(adj, Graph.labelPropagation(adj, rounds = 2),
+          "node", "label")
+      }
+    }
+    // a body that throws after its operators persisted frames still
+    // leaves nothing cached
+    intercept[IllegalArgumentException] {
+      Graph.withAdjacency(edges, "s", "d") { adj =>
+        Graph.labelPropagation(adj, rounds = 2).count()
+        Graph.kCorePeel(adj, k = 0, rounds = 1)
+      }
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a throwing graph operator left entries in the cache manager")
   }
 
   test("ratings operators release every cache before returning") {

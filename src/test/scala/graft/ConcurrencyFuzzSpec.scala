@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
@@ -59,7 +58,7 @@ class ConcurrencyFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private lazy val engine =
-    new GraftEngine(spark, Files.createTempDirectory("graft_cfuzz_").toString)
+    new GraftEngine(spark, ScratchDirs.create("graft_cfuzz_"))
 
   private def run(ses: graft.engine.GraftSession,
       sqlText: String): Either[Int, GraftResult] =
@@ -313,7 +312,7 @@ class ConcurrencyFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     // forever, no matter how many commits land while it runs — the
     // stronger sibling of part 2's non-decreasing live reads.
     val e = new GraftEngine(spark,
-      Files.createTempDirectory("graft_ttc_").toString,
+      ScratchDirs.create("graft_ttc_"),
       initialRetention = 40)
     e.sql("create schema snap")
     val committed = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
@@ -361,7 +360,7 @@ class ConcurrencyFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sessions' final images must match their sequential models, and
     // a FRESH engine over the same warehouse (catalog + reconcile
     // path) must load exactly the committed state.
-    val dir = Files.createTempDirectory("graft_cfz_txn_").toString
+    val dir = ScratchDirs.create("graft_cfz_txn_")
     val eng = new GraftEngine(spark, dir)
     eng.sql("create schema cz")
     val a = eng.newSession(); val b = eng.newSession()

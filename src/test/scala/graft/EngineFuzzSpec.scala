@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,7 +35,7 @@ class EngineFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private lazy val engine =
-    new GraftEngine(spark, Files.createTempDirectory("graft_fuzz_").toString)
+    new GraftEngine(spark, ScratchDirs.create("graft_fuzz_"))
 
   // ---- in-memory model: schema set + (schema, table) -> id -> v ----
   private val mSchemas = mutable.Set.empty[String]

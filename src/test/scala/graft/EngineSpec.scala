@@ -24,7 +24,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   private def freshEngine(): GraftEngine = {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     new GraftEngine(spark, dir)
   }
 
@@ -265,7 +265,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 263-415 get_seek_prefix): predicates on the key must become an
     // index range scan, not a full scan + filter — now reachable
     // through the engine statement surface via USING kv
-    val dir = Files.createTempDirectory("gkv_ext").toString
+    val dir = ScratchDirs.create("gkv_ext")
     graft.sources.KvSegment.appendSegment(dir,
       (0L until 1000L).map(i => i -> s"v$i"))
     graft.sources.KvSegment.appendSegment(dir,
@@ -375,7 +375,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("copy-on-write rewrite keeps write parallelism (multiple files)") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema cw"); e.sql("use cw")
     e.sql("create table big (id int, PRIMARY KEY(id))")
@@ -394,7 +394,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("catalog persists across engine restarts") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e1 = new GraftEngine(spark, dir)
     e1.sql("create schema keep"); e1.sql("use keep")
     e1.sql("create table kt (id int, name char null, PRIMARY KEY(id))")
@@ -407,10 +407,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("external tables support csv and json formats, surviving restarts") {
     import java.nio.file.Paths
-    val wh = Files.createTempDirectory("graft_wh_").toString
+    val wh = ScratchDirs.create("graft_wh_")
     val e = new GraftEngine(spark, wh)
     e.sql("create schema ext2"); e.sql("use ext2")
-    val dir = Files.createTempDirectory("graft_ext_").toString
+    val dir = ScratchDirs.create("graft_ext_")
     Files.writeString(Paths.get(s"$dir/data.csv"), "id,name\n1,alpha\n2,beta\n")
     Files.writeString(Paths.get(s"$dir/data.json"),
       "{\"id\": 3, \"name\": \"gamma\"}\n")
@@ -485,7 +485,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("file-pruned COW: selective UPDATE/DELETE rewrites strictly fewer files") {
-    val dir = Files.createTempDirectory("graft_fp_").toString
+    val dir = ScratchDirs.create("graft_fp_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema fp"); e.sql("use fp")
     e.sql("create table t (id int, val char, PRIMARY KEY(id))")
@@ -533,7 +533,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (f.isDirectory) f.listFiles().foreach(deleteDir)
       f.delete()
     }
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e1 = new GraftEngine(spark, dir)
     e1.sql("create schema cr"); e1.sql("use cr")
     e1.sql("create table t (id int, PRIMARY KEY(id))")
@@ -723,7 +723,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("views: persist across restart; replace-cycle is caught") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema vp"); e.sql("use vp")
     e.sql("create table t (id int, PRIMARY KEY(id))")
@@ -944,7 +944,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rename: survives restart via the info-schema catalog") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema rn"); e.sql("use rn")
     e.sql("create table t (id int, PRIMARY KEY(id))")
@@ -1176,7 +1176,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("orc external table: scan, aggregate, restart persistence") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val orcDir = s"$dir/ext_orc"
     import spark.implicits._
     Seq((1, "a", 10.5), (2, "b", 20.25), (3, "a", 0.25))
@@ -1208,7 +1208,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("txn: catalog writes defer to COMMIT — one flush per transaction") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema txb"); e.sql("use txb")
     e.sql("create table t (id int, v int, PRIMARY KEY(id))")
@@ -1261,7 +1261,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("catalog boot: many-table catalog reloads; the row bound is actionable") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema wide"); e.sql("use wide")
     // a catalog an order of magnitude wider than the other specs':
@@ -1287,7 +1287,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("txn: crash before COMMIT rolls the whole transaction back on reload") {
-    val dir = Files.createTempDirectory("graft_wh_").toString
+    val dir = ScratchDirs.create("graft_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema txc"); e.sql("use txc")
     e.sql("create table t (id int, v int, PRIMARY KEY(id))")

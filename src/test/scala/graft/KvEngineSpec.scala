@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -32,7 +30,7 @@ class KvEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshEngine(): (GraftEngine, String) = {
-    val dir = Files.createTempDirectory("graft_kv_wh_").toString
+    val dir = ScratchDirs.create("graft_kv_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema t")
     e.sql("use t")
@@ -249,7 +247,7 @@ class KvEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("insert…select across tables: external parquet into kv") {
     val (e, _) = freshEngine()
-    val src = Files.createTempDirectory("graft_kv_src_").toString + "/src.parquet"
+    val src = ScratchDirs.create("graft_kv_src_") + "/src.parquet"
     spark.range(1, 11).selectExpr("id", "concat('n', id) as name")
       .write.parquet(src)
     e.sql(s"create external table src USING PARQUET LOCATION '$src'")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -30,7 +28,7 @@ class KvFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("random kv DML stream matches the map model (seed 1234, 90 ops)") {
-    val wh = Files.createTempDirectory("graft_kvfuzz_").toString
+    val wh = ScratchDirs.create("graft_kvfuzz_")
     var eng = new GraftEngine(spark, wh)
     eng.sql("create schema f"); eng.sql("use f")
     eng.sql("create table kvt (k int, v char) using kv")

@@ -94,7 +94,7 @@ class KvSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- durable segment backing --------------------------------------
 
   private lazy val segPath = {
-    val dir = java.nio.file.Files.createTempDirectory("gkvseg").toString
+    val dir = ScratchDirs.create("gkvseg")
     val p = s"$dir/t.seg"
     KvSegment.write(p, (0L until 50000L).map(i =>
       i -> (if (i % 1000 == 7) null else s"v$i")))
@@ -148,7 +148,7 @@ class KvSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- multi-segment tables (growth path) ---------------------------
 
   private def threeSegments(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("gkvdir").toString
+    val dir = ScratchDirs.create("gkvdir")
     KvSegment.appendSegment(dir, (0L until 100L).map(i => i -> s"a$i"))
     KvSegment.appendSegment(dir, (50L until 150L).map(i => i -> s"b$i"))
     KvSegment.appendSegment(dir, (120L until 130L).map(i => i -> s"c$i"))
@@ -207,7 +207,7 @@ class KvSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("multi-segment: driver planning state is O(blocks + segments), " +
       "never O(keys)") {
-    val dir = java.nio.file.Files.createTempDirectory("gkvbig").toString
+    val dir = ScratchDirs.create("gkvbig")
     val n1 = 2000000
     val overlay = (n1 / 2 until n1 by 3).map(i => i.toLong -> s"b$i")
     KvSegment.appendSegment(dir, (0L until n1.toLong).map(i => i -> s"a$i"))
@@ -285,7 +285,7 @@ class KvSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("distributed writer: range-partitioned per-task segments round-trip, " +
       "appends shadow") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("gkvw").toString + "/t"
+    val dir = ScratchDirs.create("gkvw") + "/t"
     val df = (0L until 10000L).map(i => (i, s"v$i")).toDF("k", "v")
     val paths = graft.sources.KvSegmentWriter.writeDataFrame(df, dir,
       numSegments = 4)
@@ -316,7 +316,7 @@ class KvSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("durable segment: write is atomic-publish and rewrite invalidates the cache") {
-    val dir = java.nio.file.Files.createTempDirectory("gkvseg2").toString
+    val dir = ScratchDirs.create("gkvseg2")
     val p = s"$dir/u.seg"
     KvSegment.write(p, Seq(1L -> "a", 2L -> "b"))
     val d = spark.read.format("graft.sources.KvSource").option("path", p).load()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -28,7 +26,7 @@ class MergeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var n = 0
   private def freshEngine(): GraftEngine = {
-    val dir = Files.createTempDirectory("graft_merge_").toString
+    val dir = ScratchDirs.create("graft_merge_")
     val e = new GraftEngine(spark, dir)
     n += 1
     e.sql(s"create schema m$n")

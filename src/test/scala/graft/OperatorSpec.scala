@@ -299,16 +299,17 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (deg 1), round 2 drops 4 (deg fell to 1), round 3 is a fixpoint
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L))
       .toDF("s", "d")
-    val got = graft.operators.Graph.kCorePeel(edges, "s", "d", k = 2, rounds = 3)
+    def peel(e: org.apache.spark.sql.DataFrame, rounds: Int) =
+      Graph.withAdjacency(e, "s", "d")(Graph.kCorePeel(_, k = 2, rounds = rounds))
+    val got = peel(edges, 3)
       .collect().map(r => (r.getAs[Long]("node"), r.getAs[Long]("degree")))
       .sortBy(_._1)
     assert(got.toSeq == Seq((1L, 2L), (2L, 2L), (3L, 2L)))
     // one round only: 4 still present (its degree was 2 before 5 left)
-    val one = graft.operators.Graph.kCorePeel(edges, "s", "d", k = 2, rounds = 1)
+    val one = peel(edges, 1)
       .collect().map(_.getAs[Long]("node")).sorted
     assert(one.toSeq == Seq(1L, 2L, 3L, 4L))
-    val again = graft.operators.Graph
-      .kCorePeel(edges.repartition(4), "s", "d", k = 2, rounds = 3)
+    val again = peel(edges.repartition(4), 3)
       .collect().map(r => (r.getAs[Long]("node"), r.getAs[Long]("degree")))
       .sortBy(_._1)
     assert(again.toSeq == got.toSeq, "peel not repartition-invariant")
@@ -1002,6 +1003,21 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nn.filter(expr("to_json(got) != to_json(want)")).count() == 0L)
   }
 
+  test("vector expressions over a non-array column report the type-check message") {
+    import spark.implicits._
+    val df = Seq((1L, "not a vector")).toDF("id", "s")
+    Seq(
+      graft.functions.VecAsDouble(col("s")) ->
+        "graft_vec_as_double requires array<float|double>",
+      graft.functions.L2Normalize(col("s")) ->
+        "graft_l2_normalize requires array<double>"
+    ).foreach { case (e, msg) =>
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(e.as("v")).schema)
+      assert(err.getMessage.contains(msg), err.getMessage)
+    }
+  }
+
   test("clusterTuned builder carries the documented 100-TB knobs") {
     // getOrCreate applies builder options to the shared session's SQL
     // confs — snapshot and restore them so the rest of the suite keeps
@@ -1424,8 +1440,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val d = (0L until 64L).map(i => (i, s"doc $i text", 10L))
       .toDF("doc_id", "text", "n_chars")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_shards").toString
+    val out = ScratchDirs.create("graft_shards")
     Curation.shardExport(d, "doc_id")
       .write.mode("overwrite").partitionBy("shard").parquet(out)
     val shardDirs = new java.io.File(out).listFiles()
@@ -1967,7 +1982,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L), (3L, 10L)).toDF("x", "y")
     def run(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      graft.operators.Graph.labelPropagation(df, "x", "y", rounds = 3)
+      Graph.withAdjacency(df, "x", "y")(Graph.labelPropagation(_, rounds = 3))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = run(edges)
     // hand-traced synchronous rounds with the (count desc, label asc)
@@ -2027,7 +2042,9 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reported even though 1,3 are shared neighbors
     val edges = Seq((1L, 2L), (2L, 3L), (9L, 1L), (9L, 2L), (9L, 3L))
       .toDF("x", "y")
-    val got = Graph.adamicAdarTopK(edges, "x", "y", maxDegree = 64, topK = 10)
+    def aa(e: org.apache.spark.sql.DataFrame, maxDegree: Int) =
+      Graph.withAdjacency(e, "x", "y")(Graph.adamicAdarTopK(_, maxDegree, topK = 10))
+    val got = aa(edges, 64)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getLong(3))).toList
     // (1,3) is the ONLY non-edge; its middles 2 and 9 both have
@@ -2037,10 +2054,10 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cap at 2: only deg-2 nodes (1 and 3) stay eligible as middles;
     // the single pair they generate, (2,9), is an existing edge and
     // is anti-joined away -> empty report
-    val capped = Graph.adamicAdarTopK(edges, "x", "y", maxDegree = 2, topK = 10)
+    val capped = aa(edges, 2)
     assert(capped.count() == 0L)
     // partition invariance
-    val rep = Graph.adamicAdarTopK(edges.repartition(5), "x", "y", 64, 10)
+    val rep = aa(edges.repartition(5), 64)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getLong(3))).toList
     assert(rep == got)
@@ -2962,8 +2979,11 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4L, 6L), (3L, 4L)).toDF("a", "b")
     val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
       (6L, 4L)).toDF("node", "label")
-    val r = Graph.modularity(edges, "a", "b", labels, "node", "label")
-      .orderBy(col("label")).collect()
+    def modularity(e: org.apache.spark.sql.DataFrame,
+        l: org.apache.spark.sql.DataFrame) =
+      Graph.withAdjacency(e, "a", "b")(Graph.modularity(_, l, "node", "label"))
+        .orderBy(col("label")).collect()
+    val r = modularity(edges, labels)
     assert(r.length == 2)
     r.foreach { x =>
       assert(x.getAs[Long]("n_nodes") == 3L)
@@ -2973,16 +2993,24 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
         math.round(35.0 / 196.0 * 1e6))
     }
     // everyone in ONE community: Q = (4m·m − (2m)²)/(4m²) = 0 exactly
-    val one = Graph.modularity(edges, "a", "b",
-      labels.select(col("node"), lit(7L).as("label")), "node", "label")
-      .head()
+    val one = modularity(edges,
+      labels.select(col("node"), lit(7L).as("label"))).head
     assert(one.getAs[Long]("contribution_micro") == 0L)
     // duplicate + reversed + self-loop edges collapse before counting
     val messy = edges.unionAll(Seq((2L, 1L), (3L, 3L)).toDF("a", "b"))
-    val r2 = Graph.modularity(messy, "a", "b", labels, "node", "label")
-      .orderBy(col("label")).collect()
+    val r2 = modularity(messy, labels)
     assert(r2.map(_.getAs[Long]("contribution_micro")).toSeq ==
       r.map(_.getAs[Long]("contribution_micro")).toSeq)
+    // label propagation and modularity over ONE shared adjacency of the
+    // messy edges equal the two operators run over their own
+    val shared = Graph.withAdjacency(messy, "a", "b") { adj =>
+      Graph.modularity(adj, Graph.labelPropagation(adj, rounds = 3),
+        "node", "label")
+    }.orderBy(col("label")).collect()
+    val lpa = Graph.withAdjacency(messy, "a", "b")(
+      Graph.labelPropagation(_, rounds = 3))
+    assert(shared.nonEmpty)
+    assert(shared.toSeq == modularity(messy, lpa).toSeq)
   }
 
   test("minhashFidelity: exact duplicates estimate 1.0, err bounded") {

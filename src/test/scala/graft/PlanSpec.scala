@@ -10,7 +10,8 @@ import org.scalatest.BeforeAndAfterAll
 /** Plan-pinning regression tests: the physical-plan properties the
   * 100-TB design depends on, asserted over the real query battery so
   * a future edit can't silently reintroduce a scale anti-pattern.
-  * Planning only — nothing executes.
+  * Planning only — nothing executes, except a pin on a plan that AQE
+  * settles only at run time.
   */
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -357,11 +358,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("p86 link prediction: wedges generate map-side, top-k fused, no wedge self-join") {
     // the public operator eagerly materializes (plan hides behind an
     // RDD scan), so pin the lazy scoring pipeline it runs
-    import org.apache.spark.sql.functions._
-    val und = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey").as("__u"), col("l_partkey").as("__v"))
-      .filter(col("__u") =!= col("__v")).distinct()
-    val t = graft.operators.Graph.adamicAdarScored(und, 64, 50)
+    val nm = graft.operators.Graph.adjacency(
+      spark.read.parquet(s"$sfDir/lineitem.parquet"), "l_orderkey", "l_partkey")
+    val t = graft.operators.Graph.adamicAdarScored(nm, 64, 50)
       .queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
     // pairs come from the adjacency-array explode (Generate), never
@@ -369,6 +368,27 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.contains("Generate"), t.take(2000))
     assert(t.contains("TakeOrderedAndProject"), t.take(2000))
     assert(!t.contains("CartesianProduct"), t.take(2000))
+  }
+
+  test("graph degrees group on the cached adjacency's partitioning, no exchange") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val nm = graft.operators.Graph.adjacency(
+      spark.read.parquet(s"$sfDir/lineitem.parquet"), "l_orderkey", "l_partkey")
+      .persist()
+    try {
+      // the adjacency's own exchange lives inside the cached plan; the
+      // degree aggregate above the cached scan must not add another.
+      // AQE learns the cached partitioning only once the cache is
+      // built, so this pin runs the query and reads the final plan
+      val deg = graft.operators.Graph.degrees(nm)
+      deg.collect()
+      val nodes = allNodes(deg.queryExecution.executedPlan)
+      val scan = nodes.indexWhere(_.isInstanceOf[InMemoryTableScanExec])
+      assert(scan >= 0, nodes.map(_.nodeName).mkString(", "))
+      assert(!nodes.take(scan).exists(_.isInstanceOf[ShuffleExchangeLike]),
+        nodes.map(_.nodeName).mkString(", "))
+    } finally nm.unpersist()
   }
 
   test("p87 profile joins the 1-row bounds frame by broadcast only") {

@@ -46,7 +46,7 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // with identical wall-clock micros.
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val dir = java.nio.file.Files.createTempDirectory("ntzfix").toString
+    val dir = ScratchDirs.create("ntzfix")
     spark.range(3)
       .select(col("id").as("event_id"),
         timestamp_micros(col("id") * 1000000L + 1700000000000000L)

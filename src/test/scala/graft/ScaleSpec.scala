@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SimpleMode
 import org.apache.spark.sql.functions._
@@ -137,7 +135,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partition pruning: a partitioned write is read with PartitionFilters") {
-    val dir = Files.createTempDirectory("graft_part_").toString
+    val dir = ScratchDirs.create("graft_part_")
     val li = graft.queries.QueryUtil.tbl(spark, sfDir, "lineitem")
     li.select("l_orderkey", "l_quantity", "l_returnflag")
       .write.partitionBy("l_returnflag").mode("overwrite").parquet(dir)

@@ -394,8 +394,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ckpt").toString
+    val ckpt = ScratchDirs.create("graft_ckpt")
     val emitted = new scala.collection.concurrent.TrieMap[Long, Long]()
     def start() = EventStreams
       .dedupStream(input.toDF(), Seq("event_id"), "2 hours")
@@ -496,12 +495,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("engine KV ingest is replay-idempotent: a full re-drain leaves the image unchanged") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_ingest_").toString
+    val wh = ScratchDirs.create("graft_ingest_")
     val eng = new graft.engine.GraftEngine(spark, wh)
     eng.sql("create schema ing"); eng.sql("use ing")
     eng.sql("create table ev (k int, v char) using kv")
-    val src = java.nio.file.Files.createTempDirectory("graft_ingest_src_")
-      .toString + "/feed.parquet"
+    val src = ScratchDirs.create("graft_ingest_src_") + "/feed.parquet"
     spark.range(1, 301)
       .selectExpr("id", "concat('t', id % 5) as typ").write.parquet(src)
     def drain(ckpt: String): Unit =
@@ -535,8 +533,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 6 part files → 6 micro-batches under maxFilesPerTrigger=1; the
     // value is a pure function of the key so replay at ANY batch
     // boundary must converge to the batch-computed image
-    val src = java.nio.file.Files.createTempDirectory("graft_crash_src_")
-      .toString + "/feed.parquet"
+    val src = ScratchDirs.create("graft_crash_src_") + "/feed.parquet"
     spark.range(1, 241).repartition(6)
       .selectExpr("id", "concat('v', id % 7) as typ").write.parquet(src)
     val expected = spark.read.parquet(src)
@@ -551,8 +548,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 3).foreach { trial =>
       val crashAt = rnd.nextInt(6).toLong
       val afterWrite = trial % 2 == 0
-      val wh = java.nio.file.Files
-        .createTempDirectory(s"graft_crash_$trial").toString
+      val wh = ScratchDirs.create(s"graft_crash_$trial")
       val eng = new graft.engine.GraftEngine(spark, wh)
       eng.sql("create schema cr"); eng.sql("use cr")
       eng.sql("create table ev (k int, v char) using kv")
@@ -592,7 +588,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming MERGE accumulates per-user aggregates across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val wh = java.nio.file.Files.createTempDirectory("graft_smrg_").toString
+    val wh = ScratchDirs.create("graft_smrg_")
     val eng = new graft.engine.GraftEngine(spark, wh)
     eng.sql("create schema sm")
     eng.sql("use sm")

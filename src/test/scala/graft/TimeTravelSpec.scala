@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -28,7 +26,7 @@ class TimeTravelSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshEngine(): (GraftEngine, String) = {
-    val dir = Files.createTempDirectory("graft_tt_").toString
+    val dir = ScratchDirs.create("graft_tt_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema tt")
     e.sql("use tt")
@@ -223,7 +221,7 @@ class TimeTravelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("external tables and string literals are left alone") {
     val (e, _) = freshEngine()
-    val ext = Files.createTempDirectory("graft_ext_").toString
+    val ext = ScratchDirs.create("graft_ext_")
     spark.range(3).toDF("id").write.mode("overwrite").parquet(ext)
     e.sql(s"create external table x using parquet location '$ext'")
     intercept[GraftException] { e.tableAsOf("x", 0) }

@@ -447,7 +447,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- end to end --------------------------------------------------
 
   test("a wire client runs the engine surface end to end") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire_").toString
+    val wh = ScratchDirs.create("graft_wire_")
     val eng = new GraftEngine(spark, wh)
     val srv = new MysqlServer(eng)
     try {
@@ -488,7 +488,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("two connections keep isolated session schemas") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire2_").toString
+    val wh = ScratchDirs.create("graft_wire2_")
     val eng = new GraftEngine(spark, wh)
     val srv = new MysqlServer(eng)
     try {
@@ -518,7 +518,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("multi-statement COM_QUERY: sequenced responses, error aborts") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire4_").toString
+    val wh = ScratchDirs.create("graft_wire4_")
     val eng = new GraftEngine(spark, wh)
     val srv = new MysqlServer(eng)
     try {
@@ -584,7 +584,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("COM_STMT_RESET clears param state; unknown id is 1243") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire5_").toString
+    val wh = ScratchDirs.create("graft_wire5_")
     val eng = new GraftEngine(spark, wh)
     eng.sql("create schema rs")
     eng.sql("use rs")
@@ -614,7 +614,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("COM_STMT_SEND_LONG_DATA: chunks concatenate, persist across " +
       "execute, drain on reset") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire6_").toString
+    val wh = ScratchDirs.create("graft_wire6_")
     val eng = new GraftEngine(spark, wh)
     eng.sql("create schema ld")
     eng.sql("use ld")
@@ -649,7 +649,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("COM_RESET_CONNECTION: txn rolled back, stmts dropped, " +
       "schema cleared; connection survives") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire7_").toString
+    val wh = ScratchDirs.create("graft_wire7_")
     val eng = new GraftEngine(spark, wh)
     eng.sql("create schema rc")
     eng.sql("use rc")
@@ -691,7 +691,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("COM_SET_OPTION toggles multi-statements; COM_CHANGE_USER " +
       "resets into the requested db") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire8_").toString
+    val wh = ScratchDirs.create("graft_wire8_")
     val eng = new GraftEngine(spark, wh)
     eng.sql("create schema su")
     eng.sql("use su")
@@ -729,7 +729,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("caching_sha2 clients are switched to native password with " +
     "well-formed frames") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire4_").toString
+    val wh = ScratchDirs.create("graft_wire4_")
     val eng = new GraftEngine(spark, wh)
     val srv = new MysqlServer(eng)
     try {
@@ -755,7 +755,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SHOW PROCESSLIST lists connections by handshake id; KILL " +
     "terminates the target") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire5_").toString
+    val wh = ScratchDirs.create("graft_wire5_")
     val eng = new GraftEngine(spark, wh)
     val srv = new MysqlServer(eng)
     try {
@@ -803,7 +803,7 @@ class WireSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connect-with-db lands the handshake database") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wire3_").toString
+    val wh = ScratchDirs.create("graft_wire3_")
     val eng = new GraftEngine(spark, wh)
     eng.sql("create schema pre")
     eng.sql("use pre")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +29,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshEngine(): (GraftEngine, String) = {
-    val dir = Files.createTempDirectory("graft_zo_wh_").toString
+    val dir = ScratchDirs.create("graft_zo_wh_")
     val e = new GraftEngine(spark, dir)
     e.sql("create schema t")
     e.sql("use t")
@@ -47,7 +45,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (e, wh) = freshEngine()
     // 64×64 grid inserted in row-major order: the natural layout
     // clusters y (consecutive rows share y) and scatters x
-    val src = Files.createTempDirectory("graft_zo_src_").toString + "/grid.parquet"
+    val src = ScratchDirs.create("graft_zo_src_") + "/grid.parquet"
     spark.range(0, 4096).selectExpr("id % 64 as x", "id div 64 as y")
       .coalesce(1).write.parquet(src)
     e.sql(s"create external table src USING PARQUET LOCATION '$src'")
@@ -93,7 +91,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (e, _) = freshEngine()
     val eng2 = e
     eng2.setVersionRetention(10)
-    val src = Files.createTempDirectory("graft_zo_src2_").toString + "/s.parquet"
+    val src = ScratchDirs.create("graft_zo_src2_") + "/s.parquet"
     spark.range(0, 100).selectExpr("id as x", "(id * 7) % 100 as y")
       .write.parquet(src)
     eng2.sql(s"create external table src2 USING PARQUET LOCATION '$src'")
