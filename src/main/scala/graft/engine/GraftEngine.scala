@@ -53,13 +53,17 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
   private var views: Map[(String, String), String] = Map.empty
   private var globals: Map[String, String] = Map.empty
 
-  // Engine sessions get the banded range-join rewrite automatically
-  // (library users opt in via spark.sql.extensions or
-  // experimental.extraOptimizations) — a pure `y < x <= y+W` join in
-  // engine SQL plans as two hash joins instead of a nested loop.
-  if (!spark.experimental.extraOptimizations
-      .contains(graft.plans.BandedRangeJoin))
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.BandedRangeJoin)
+  // Engine sessions get the engine's optimizer rules automatically: a
+  // pure `y < x <= y+W` join plans as two hash joins instead of a
+  // nested loop, a small engine-table read runs as one partition with
+  // no exchange, and a SELECT of constants answers from the driver
+  // (Spark's ConvertToLocalRelation then folds a LIMIT above it).
+  // Library users opt in to the range-join rewrite via
+  // spark.sql.extensions or experimental.extraOptimizations.
+  spark.experimental.extraOptimizations ++= Seq(graft.plans.BandedRangeJoin,
+    graft.plans.SingleSplitScan, graft.plans.FoldConstantSelect,
+    org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation)
+    .filterNot(spark.experimental.extraOptimizations.contains)
 
   // ---- session registry (SHOW PROCESSLIST / KILL) ------------------
   // Connection pools (HikariCP health probes, mysqladmin) issue SHOW
@@ -454,8 +458,10 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
           Map("dir" -> tableDir(td)))
       else (td.format, Map("path" -> tableDir(td)) ++
         (if (td.format == "csv") Map("header" -> "true") else Map.empty))
+    // the marker graft.plans.SingleSplitScan recognises engine tables by
     spark.catalog.createTable(s"${td.schema}.${td.name}", provider,
-      td.visibleSchema, opts)
+      td.visibleSchema,
+      opts + (graft.plans.SingleSplitScan.EngineTableOption -> "true"))
   }
 
   private val infoTables = Seq("schemata", "tables", "columns", "statistics",

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import java.util.OptionalLong
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -96,13 +97,17 @@ class KvSource extends TableProvider {
       case (None, Some(p)) => FileBacking(p)
       case _ => MemBacking(properties.get("name"))
     }
-    new KvTable(backing)
+    new KvTable(backing, properties)
   }
 }
 
-class KvTable(backing: KvBacking) extends Table with SupportsRead {
+/** `props` are the options the table was opened with; they are its
+  * table properties, where the engine's registration marker is read. */
+class KvTable(backing: KvBacking, props: util.Map[String, String])
+    extends Table with SupportsRead {
   override def name(): String = s"graft-kv(${backing.label})"
   override def schema(): StructType = KvStore.schema
+  override def properties(): util.Map[String, String] = props
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -226,7 +231,7 @@ class KvScanBuilder(backing: KvBacking) extends ScanBuilder
 
 class KvScan(backing: KvBacking, lo: Long, hi: Long, projection: StructType,
     aggTokens: Array[String] = Array.empty)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
   private def aggSchema: StructType =
     StructType(aggTokens.zipWithIndex.map { case (t, i) =>
       org.apache.spark.sql.types.StructField(s"${t}_$i", LongType,
@@ -243,6 +248,35 @@ class KvScan(backing: KvBacking, lo: Long, hi: Long, projection: StructType,
         case "cnt" => "COUNT"; case "min" => "MIN(k)"; case "max" => "MAX(k)"
       }.mkString(" PushedAggregates: [", ", ", "]")
     s"graft-kv ${backing.label} $kind cols=${projection.fieldNames.mkString(",")}$aggNote"
+  }
+
+  /** Size of what this scan reads: per segment, the rows of the
+    * clipped range (before newest-wins shadowing, so an upper bound)
+    * times the segment's own bytes per row; a pushed aggregate reads
+    * one row of longs. The in-memory registry has no segment and
+    * reports no size. */
+  override def estimateStatistics(): Statistics = {
+    def clippedBytes(path: String): Long = {
+      val fi = KvSegment.fenceIndex(path)
+      if (fi.n == 0) 0L
+      else {
+        val (from, until) = clipRange(path, fi)
+        (until - from).toLong * new java.io.File(path).length() / fi.n
+      }
+    }
+    val bytes: Option[Long] =
+      if (aggTokens.nonEmpty) Some(8L * aggTokens.length)
+      else backing match {
+        case MemBacking(_) => None
+        case FileBacking(path) => Some(clippedBytes(path))
+        case DirBacking(dir) =>
+          Some(KvSegment.listSegments(dir).map(clippedBytes).sum)
+      }
+    new Statistics {
+      override def sizeInBytes(): OptionalLong =
+        bytes.fold(OptionalLong.empty())(OptionalLong.of)
+      override def numRows(): OptionalLong = OptionalLong.empty()
+    }
   }
 
   /** Plan-time evaluation of pushed COUNT/MIN/MAX: exact row indices

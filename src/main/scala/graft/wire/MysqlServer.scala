@@ -4,10 +4,10 @@ import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.engine.{AffectedRows, GraftEngine, GraftException, GraftResult,
@@ -42,11 +42,12 @@ import Packets._
   * binary protocol.
   *
   * Both protocols share one result writer ([[respondAt]]). A result
-  * whose rows already sit on the driver — SHOW, DESCRIBE, EXPLAIN and
-  * VALUES, which plan as a `LocalTableScanExec` — goes out with no
-  * Spark job. Every other result streams with `toLocalIterator`, one
-  * job per partition; that includes a SELECT of constants, which plans
-  * as a projection over `OneRowRelation`.
+  * whose rows already sit on the driver — SHOW, DESCRIBE, EXPLAIN,
+  * VALUES and a SELECT of constants, which plan as a
+  * `LocalTableScanExec` — goes out with no Spark job. Every other
+  * result streams in batches of up to `defaultParallelism` partitions,
+  * one Spark job per batch: a result of that many partitions or fewer
+  * costs one job.
   */
 class MysqlServer(engine: GraftEngine, port: Int = 0) {
 
@@ -392,7 +393,9 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
     val result =
       try run match {
         case AffectedRows(n) => Right(Left(n))
-        case ResultSet(df) => Right(Right((df.schema, resultRows(df))))
+        case ResultSet(df) =>
+          df.queryExecution.executedPlan // plan before any byte goes out
+          Right(Right(df))
       } catch { case e: Throwable => Left(e) }
     result match {
       case Left(e) => fail(seqStart, e)
@@ -400,7 +403,8 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
         val next = send(seqStart, ok(n, 0L, status))
         out.flush()
         (next, false)
-      case Right(Right((schema, rows))) =>
+      case Right(Right(df)) =>
+        val schema = df.schema
         val tcs = schema.fields.map(f => f.dataType match {
           case LongType => TypeLongLong
           case DoubleType => TypeDouble
@@ -413,7 +417,7 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
         seq = send(seq, eof())
         val rowErr =
           try {
-            rows.foreach { row =>
+            foreachRow(df) { row =>
               val cells = tcs.indices.map(i =>
                 if (row.isNullAt(i)) None else Some(row.get(i)))
               seq = send(seq,
@@ -430,15 +434,34 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
     }
   }
 
-  /** A result's rows, from the plan its DataFrame already built. A
-    * `LocalTableScanExec` (SHOW, DESCRIBE, EXPLAIN, VALUES) holds its
-    * rows on the driver, and `collect()` returns them with no Spark
-    * job. Any other plan streams through `toLocalIterator()`, one
-    * partition per job, so driver memory stays O(partition), not
-    * O(result). */
-  private def resultRows(df: DataFrame): Iterator[Row] =
-    df.queryExecution.executedPlan match {
-      case _: LocalTableScanExec => df.collect().iterator
-      case _ => df.toLocalIterator().asScala
+  /** Hands a result's rows to `f` in order, from the plan its
+    * DataFrame already built. A `LocalTableScanExec` (SHOW, DESCRIBE,
+    * EXPLAIN, VALUES, a SELECT of constants) holds its rows on the
+    * driver, and `collect()` returns them with no Spark job. Any other
+    * plan runs in batches of up to `defaultParallelism` partitions,
+    * one `runJob` each, in partition order (the shape of
+    * `executeTake`), so driver memory stays bounded at one batch. The
+    * batches run inside one SQL execution, so SQL and
+    * `QueryExecutionListener` callbacks fire as for any action. */
+  private def foreachRow(df: DataFrame)(f: Row => Unit): Unit = {
+    val qe = df.queryExecution
+    qe.executedPlan match {
+      case _: LocalTableScanExec => df.collect().foreach(f)
+      case plan =>
+        val toRow = ExpressionEncoder(df.schema).resolveAndBind()
+          .createDeserializer()
+        SQLExecution.withNewExecutionId(qe, Some("wireResult")) {
+          plan.resetMetrics()
+          val rdd = plan.execute()
+          val sc = rdd.sparkContext
+          val n = rdd.getNumPartitions
+          val step = sc.defaultParallelism
+          (0 until n by step).foreach { from =>
+            sc.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray,
+              from until math.min(from + step, n))
+              .foreach(_.foreach(r => f(toRow(r))))
+          }
+        }
     }
+  }
 }

@@ -1337,4 +1337,86 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(intercept[GraftException](s1.sql("select 1")).code == 1317)
     s1.close()
   }
+
+  // ---- graft.plans.SingleSplitScan
+  /** Shuffle exchanges in a statement's physical plan, as planned
+    * (AQE's initial plan: nothing executes). */
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    nodes(df.queryExecution.executedPlan).count(_.isInstanceOf[ShuffleExchangeLike])
+  }
+
+  test("small engine-table reads plan no exchange; above the bound and " +
+    "in a session with no engine the same reads keep theirs") {
+    val e = freshEngine()
+    e.sql("create schema ss")
+    e.sql("use ss")
+    e.sql("create table acct (id int, grp int, amount float, tag char, PRIMARY KEY(id))")
+    e.sql("create table kv (k int, v char) using kv")
+    e.sql("insert into acct values " + (1 to 300).map(i =>
+      s"($i, ${i % 9}, ${i * 3}, 't${i % 11}')").mkString(", "))
+    e.sql("insert into kv values " + (1 to 200).map(k =>
+      s"($k, 'v$k')").mkString(", "))
+    // wire_read's shapes: ORDER BY range, GROUP BY … ORDER BY,
+    // join + GROUP BY, wide ORDER BY
+    val shapes = Seq(
+      "select k, v from kv where k >= 20 and k < 70 order by k",
+      "select grp, count(*), sum(amount) from acct where grp < 6 group by grp order by grp",
+      "select a.grp, count(*), sum(a.amount) from acct a join kv k " +
+        "on a.id = k.k where a.grp = 4 group by a.grp",
+      "select id, grp, amount, tag from acct where id > 40 and id <= 260 order by id")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).sortBy(_.head.toString)
+    val want = shapes.map { q =>
+      val df = e.query(q)
+      assert(exchanges(df) == 0, s"`$q` plans a shuffle exchange:\n" +
+        df.queryExecution.executedPlan)
+      sorted(df)
+    }
+    assert(want.map(_.size) == Seq(50, 6, 1, 220))
+
+    // above the bound: the same tables, with a bound below their size
+    val bound = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", "64")
+    try shapes.zip(want).foreach { case (q, rs) =>
+      val df = e.query(q)
+      assert(exchanges(df) > 0, s"`$q` lost its exchanges above the bound")
+      assert(sorted(df) == rs, q)
+    } finally spark.conf.set("spark.sql.files.openCostInBytes", bound)
+
+    // a session that never built an engine reads the same catalog
+    // tables with its plans unchanged
+    val plain = spark.newSession()
+    plain.catalog.setCurrentDatabase("ss")
+    shapes.zip(want).foreach { case (q, rs) =>
+      val df = plain.sql(q)
+      assert(exchanges(df) > 0, s"`$q` changed in a session with no engine")
+      assert(!df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Repartition]), q)
+      assert(sorted(df) == rs, q)
+    }
+  }
+
+  test("a global aggregate over an empty engine table or KV range " +
+    "returns its one row") {
+    val e = freshEngine()
+    e.sql("create schema ea")
+    e.sql("use ea")
+    e.sql("create table empty_cow (id int, amount float, PRIMARY KEY(id))")
+    e.sql("create table kv (k int, v char) using kv")
+    e.sql("insert into kv values (1, 'a'), (2, 'b')")
+    Seq("select count(*), max(amount) from empty_cow",
+      "select count(*), max(v) from kv where k > 100").foreach { q =>
+      val df = e.query(q)
+      assert(exchanges(df) == 0, q)
+      assert(df.collect().toSeq.map(_.toSeq) == Seq(Seq(0L, null)), q)
+    }
+  }
 }

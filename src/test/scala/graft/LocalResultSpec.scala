@@ -18,8 +18,10 @@ import graft.wire.{MysqlServer, TextClient}
   * (COM_STMT_EXECUTE). Each reply keeps the column names, types and
   * nullability the engine's earlier `Seq[Tuple].toDF(...)` form gave
   * it: the expected schemas below are built with `toDF` itself. A
-  * SELECT that reads a multi-partition scan still streams, one job per
-  * partition, and returns exactly the rows of `collect()` in order.
+  * SELECT of constants folds to a local relation and runs no job
+  * either. A SELECT that reads a multi-partition scan streams in
+  * batches of up to `defaultParallelism` (4) partitions, one job per
+  * batch, and returns exactly the rows of `collect()` in order.
   */
 class LocalResultSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -187,10 +189,29 @@ class LocalResultSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a SELECT of constants reaches both protocols with no Spark job") {
+    Seq("SELECT 1" -> Seq(Row(1)),
+      "select @@version_comment limit 1" -> Seq(Row("ebikespark-0.1.0-version_comment")))
+      .foreach { case (sql, want) =>
+        assert(eng.query(sql).collect().toSeq == want, sql)
+
+        val ((_, textRows), textJobs) = jobsDuring(client.query(sql))
+        assert(textJobs == 0, s"text protocol ran $textJobs job(s) for `$sql`")
+        assert(textRows == text(want), sql)
+
+        val (id, _) = client.prepare(sql)
+        val ((_, binRows), binJobs) = jobsDuring(client.executeQuery(id, Nil))
+        assert(binJobs == 0, s"binary protocol ran $binJobs job(s) for `$sql`")
+        assert(binRows == binary(want), sql)
+      }
+  }
+
   test("a multi-partition SELECT streams exactly the rows of collect(), " +
     "in order, on both protocols") {
     // four files of different sizes: a scan orders its partitions by
-    // file size, so every plan of `big` reads them in the same order
+    // file size, so every plan of the directory reads them in the same
+    // order. It is read by path, not as an engine table, so it keeps
+    // its partitions: a small engine table would read as one.
     val src = s"$wh/stream_src"
     Seq(0L -> 100L, 100L -> 300L, 300L -> 600L, 600L -> 1000L).foreach {
       case (lo, hi) =>
@@ -200,23 +221,37 @@ class LocalResultSpec extends AnyFunSuite with BeforeAndAfterAll {
             "cast(id as double) * 0.5 as x")
           .write.mode("append").parquet(src)
     }
-    eng.sql(s"create external table big USING PARQUET LOCATION '$src'")
-    Seq("select id, s, x from big",
-      "select id, s, x from big order by x desc").foreach { sql =>
-      val df = eng.query(sql)
+    val big = s"parquet.`$src`"
+    // A statement's jobs: the ones its analysis runs (parquet schema
+    // inference of the path read), `stageJobs` that an ORDER BY runs
+    // before its result (the range-partition sample and the shuffle-map
+    // stage), then one result job per batch of 4 partitions.
+    def check(sql: String, minParts: Int, stageJobs: Int): Unit = {
+      val (df, analysisJobs) = jobsDuring(eng.query(sql))
       val parts = df.queryExecution.toRdd.getNumPartitions
-      assert(parts >= 3, s"`$sql` has $parts partitions")
+      assert(parts >= minParts, s"`$sql` has $parts partitions")
+      val jobs = analysisJobs + stageJobs + (parts + 3) / 4
       val want = df.collect().toSeq
       assert(want.length == 1000)
 
       val ((_, textRows), textJobs) = jobsDuring(client.query(sql))
       assert(textRows == text(want), sql)
-      assert(textJobs >= parts, s"`$sql` ran $textJobs job(s) for $parts partitions")
+      assert(textJobs == jobs, s"`$sql` ran $textJobs job(s) for $parts partitions")
 
       val (id, _) = client.prepare(sql)
       val ((_, binRows), binJobs) = jobsDuring(client.executeQuery(id, Nil))
       assert(binRows == binary(want), sql)
-      assert(binJobs >= parts, s"`$sql` ran $binJobs job(s) for $parts partitions")
+      assert(binJobs == jobs, s"`$sql` ran $binJobs job(s) for $parts partitions")
     }
+    // one result job for the four file splits, and for the ORDER BY's
+    // four range partitions
+    check(s"select id, s, x from $big", 3, 0)
+    check(s"select id, s, x from $big order by x desc", 4, 2)
+    // seven range partitions, more than defaultParallelism: two result
+    // jobs
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try check(s"select id, s, x from $big order by x desc", 5, 2)
+    finally spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
   }
 }
