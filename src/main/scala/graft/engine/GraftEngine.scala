@@ -5,7 +5,11 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession, graftshim}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.{ExplainMode, ExtendedMode, SimpleMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
@@ -36,8 +40,8 @@ import SqlText._
   * leaves no dangling index state; SHOW VARIABLES LIKE filters on the
   * variable *name* (the reference filters on the value —
   * `show_variables.rs:75-83` — a bug we do not replicate); a SELECT
-  * mentioning `rowid` sees it via shadow views, in which case `*`
-  * includes rowid.
+  * naming a `rowid` attribute reads each COW table it references
+  * through the table's full image, so there `*` includes rowid.
   */
 class GraftEngine(val spark: SparkSession, warehouse: String,
     initialRetention: Int = 2) {
@@ -49,7 +53,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
   private var schemas: Set[String] = Set.empty
   private var tables: Map[(String, String), TableDef] = Map.empty
   // (schema, name) -> stored SELECT body, engine dialect (expanded
-  // per statement in doSelect; persisted in info-schema `views`)
+  // per statement in enginePlan; persisted in info-schema `views`)
   private var views: Map[(String, String), String] = Map.empty
   private var globals: Map[String, String] = Map.empty
 
@@ -109,34 +113,23 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     * excludes readers (they would otherwise see a half-swapped COW
     * registration), but readers never serialize behind each other —
     * including EXPLAIN ANALYZE, which executes its plan under the
-    * read lock. Driver-side ANALYSIS against shared Spark session
-    * state (current database + rowid shadow temp views) additionally
-    * serializes on [[analysisMutex]], held for analysis only, never
-    * for execution: the DataFrame a read statement returns executes
-    * entirely outside engine locks. */
+    * read lock. A read's analysis consults no shared Spark session
+    * state: [[doSelect]] resolves every engine name on the parsed
+    * plan, so reads from different sessions analyze in parallel. The
+    * shared session's current database is set only under the write
+    * lock, for the DML expressions that still resolve through it.
+    * The DataFrame a read statement returns executes entirely outside
+    * engine locks. */
   private val lock = new java.util.concurrent.locks.ReentrantReadWriteLock()
-  private val analysisMutex = new Object
 
   /** The session whose statement is executing on THIS thread —
     * thread-local so concurrent read statements from different
     * sessions can't see each other's current schema. */
   private val activeTL = new ThreadLocal[GraftSession]
-  // view names being expanded on this thread — cycle breaker for
-  // recursively-defined views (doSelect)
-  private val viewStack: ThreadLocal[Set[(String, String)]] =
-    ThreadLocal.withInitial(() => Set.empty[(String, String)])
 
   private def active: GraftSession = activeTL.get()
 
-  // definer-schema resolution: while a view body expands, bare names
-  // resolve against the view's OWN schema (MySQL semantics), not the
-  // statement's session schema — a thread-local so concurrent
-  // sessions never see each other's override
-  private val schemaOverrideTL: ThreadLocal[Option[String]] =
-    ThreadLocal.withInitial(() => None)
-
-  private def currentSchema: Option[String] =
-    schemaOverrideTL.get().orElse(active.currentSchema)
+  private def currentSchema: Option[String] = active.currentSchema
 
   /** How many newest committed versions each COW table keeps on disk.
     * The floor of 2 is the in-flight-reader grace window
@@ -203,6 +196,13 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     activeTL.set(ses)
     l.lock()
     try {
+      // DML conditions (`expr(...)`) resolve bare names in their
+      // subqueries through the shared session's current database. The
+      // write lock excludes every other statement, and no read
+      // consults it, so pinning it here is race-free. A schema another
+      // session dropped falls back to `default`, as with none selected.
+      if (!readOnly) spark.catalog.setCurrentDatabase(
+        ses.currentSchema.filter(schemas.contains).getOrElse("default"))
       // MySQL implicit commit: DDL ends any open transaction BEFORE
       // executing — a txn can never hold undo entries for a table
       // whose shape (or existence) changed under it
@@ -210,7 +210,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         "(?s)(create|drop|alter|truncate|rename|optimize|vacuum|restore)\\b.*"))
         endTxn(ses)
       if (lower.startsWith("select") || lower.startsWith("with") ||
-        lower.startsWith("values") || lower.startsWith("(")) doSelect(stmt)
+        lower.startsWith("values") || lower.startsWith("(")) ResultSet(doSelect(stmt))
       else if (lower.startsWith("explain")) doExplain(stmt)
       else if (lower.matches("(?s)create\\s+(schema|database)\\b.*"))
         doCreateSchema(stmt)
@@ -561,25 +561,26 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
   /** Qualify with the session schema, lowercase — `fill_up_table_name`
     * (`/root/reference/src/meta/meta_util.rs:256-279`): error 1046
     * when unqualified with no schema selected. */
-  private def resolveName(raw: String): (String, String) = {
-    val parts = splitTopLevel(raw.trim, '.').map(ident)
+  private def resolveName(raw: String): (String, String) =
+    qualify(splitTopLevel(raw.trim, '.').map(ident), currentSchema)
+
+  private def qualify(parts: Seq[String], schema: Option[String]): (String, String) =
     parts match {
-      case Seq(t) =>
-        (currentSchema.getOrElse(throw Errors.noSchemaSelected), t)
+      case Seq(t) => (schema.getOrElse(throw Errors.noSchemaSelected), t)
       case Seq(s, t) => (s, t)
       case Seq(_, s, t) => (s, t) // catalog.schema.table → ignore catalog 'def'
-      case _ => throw Errors.generic(s"bad table name: $raw")
+      case _ => throw Errors.generic(s"bad table name: ${parts.mkString(".")}")
     }
-  }
 
-  private def lookup(raw: String): TableDef = {
-    val (s, t) = resolveName(raw)
-    tables.getOrElse((s, t), {
-      if (views.contains((s, t))) throw Errors.generic(
+  private def lookup(raw: String): TableDef = baseTable(resolveName(raw))
+
+  private def baseTable(key: (String, String)): TableDef =
+    tables.getOrElse(key, {
+      val (s, t) = key
+      if (views.contains(key)) throw Errors.generic(
         s"'$s.$t' is a view — this statement targets base tables")
       throw Errors.noSuchTable(s, t)
     })
-  }
 
   private def readFull(td: TableDef): DataFrame =
     spark.read.schema(td.fullSchema).parquet(tableDir(td))
@@ -701,124 +702,95 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
   private def rewrite(stmt: String): String =
     substituteVars(stmt, globals, Version, currentSchema)
 
-  private def doSelect(stmt: String): GraftResult = analysisMutex.synchronized {
-    // pin the shared Spark session catalog to THIS engine session's
-    // schema (several engines may share one SparkSession, and read
-    // statements from different sessions now run concurrently) —
-    // analysisMutex makes set-current-database + analysis atomic.
-    // spark.sql analyzes eagerly, so the mutex is held for driver-side
-    // analysis only; the returned DataFrame executes outside it.
-    spark.catalog.setCurrentDatabase(currentSchema.getOrElse("default"))
-    var sqlText = rewrite(stmt)
-    val shadowed = scala.collection.mutable.ArrayBuffer[String]()
-    // view expansion FIRST: each referenced view becomes a temp view
-    // whose frame is the stored body run through this same pipeline
-    // recursively — nested views, time travel and rowid shadows
-    // inside bodies all compose for free. A thread-local stack breaks
-    // definition cycles (CREATE OR REPLACE can introduce one after
-    // both definitions validated), and a thread-local schema override
-    // gives a body MySQL's definer-schema resolution: its bare names
-    // resolve against the view's own schema, wherever the read runs.
-    // cheap substring pre-filter so per-statement analysis cost is
-    // O(referenced views), not O(all registered views): the quote-
-    // aware ident/qualified scans below only run for views whose name
-    // appears SOMEWHERE in the text. Conservative by construction —
-    // rewrites only splice `__view_<vs>_<vn>` shadow names (single
-    // identifiers, no dots), which can never introduce a new genuine
-    // view reference, so the snapshot taken before the loop stays an
-    // over-approximation as sqlText mutates.
-    val lowerStmt = sqlText.toLowerCase
-    views.foreach { case ((vs, vn), body) =>
-      if (!lowerStmt.contains(vn.toLowerCase)) () else {
-      val shadowName = s"__view_${vs}_$vn"
-      val (rewritten, qualified) =
-        replaceQualifiedRef(sqlText, vs, vn, shadowName)
-      val bare = !qualified && currentSchema.contains(vs) &&
-        containsIdent(sqlText, vn)
-      if (qualified || bare) {
-        val key = (vs, vn)
-        val stack = viewStack.get()
-        if (stack.contains(key)) throw Errors.generic(
-          s"view '$vs.$vn' is recursively defined")
-        viewStack.set(stack + key)
-        val prevOverride = schemaOverrideTL.get()
-        schemaOverrideTL.set(Some(vs))
-        val df =
-          try doSelect(body) match {
-            case ResultSet(d) => d
-            case other => throw Errors.generic(
-              s"view '$vs.$vn' body returned $other, not rows")
-          } finally {
-            viewStack.set(stack)
-            schemaOverrideTL.set(prevOverride)
-          }
-        if (qualified) {
-          sqlText = rewritten
-          df.createOrReplaceTempView(shadowName)
-          shadowed += shadowName
-        } else {
-          df.createOrReplaceTempView(vn)
-          shadowed += vn
-        }
+  /** SELECT, run the way Spark's own `sql` runs it — parse on the
+    * statement's planning tracker, then `Dataset.ofRows` on the same
+    * tracker — with the engine's names resolved on the parsed plan in
+    * between ([[enginePlan]]). Spark analyzes eagerly, under the
+    * caller's statement lock; the DataFrame executes outside it. */
+  private def doSelect(stmt: String): DataFrame =
+    graftshim.ofRows(spark)(enginePlan(stmt, currentSchema, Set.empty, _))
+
+  /** Parse `stmt` after `@@var`/`database()` substitution and resolve
+    * the engine's names on the plan, as the reference does on its AST
+    * before DataFusion plans (`fix_statement`, `execution.rs:157-333`).
+    * One walk over the plan, its subquery plans and its CTE
+    * definitions:
+    *  - `t VERSION AS OF n` reads the table's committed v<n> snapshot
+    *    (Spark's analyzer reserves that syntax for v2 catalogs);
+    *  - an engine view expands to its stored body, resolved by this
+    *    function against the VIEW's schema (MySQL definer-schema
+    *    resolution); `expanding` holds the views being expanded and
+    *    catches the cycles a CREATE OR REPLACE can introduce;
+    *  - every other single-part name is qualified with `schema`
+    *    (`default` when none is selected), except CTE names in scope
+    *    and Spark temp views (`dual`);
+    *  - when the statement names an attribute `rowid`, each COW table
+    *    reads through its full image, rowid included. The reference
+    *    hides rowid from `*` (`meta_def.rs:385-395`); in such a
+    *    statement `*` includes it here. KV tables have no rowid.
+    * The walk carries the CTE names in scope down the tree, which a
+    * bottom-up transform cannot. Nothing here touches shared session
+    * state, so concurrent reads analyze in parallel. */
+  private def enginePlan(stmt: String, schema: Option[String],
+      expanding: Set[(String, String)],
+      tracker: QueryPlanningTracker): LogicalPlan = {
+    val text = substituteVars(stmt, globals, Version, schema)
+    val parsed = tracker.measurePhase(QueryPlanningTracker.PARSING)(
+      spark.sessionState.sqlParser.parsePlan(text))
+    def namesRowid(p: LogicalPlan): Boolean =
+      p.expressions.exists(_.exists {
+        case a: UnresolvedAttribute => a.nameParts.last.equalsIgnoreCase(RowId)
+        case q: SubqueryExpression => namesRowid(q.plan)
+        case _ => false
+      }) || (p.children ++ p.innerChildren).exists {
+        case c: LogicalPlan => namesRowid(c)
+        case _ => false
       }
+    val withRowid = namesRowid(parsed)
+    def alias(key: (String, String), plan: LogicalPlan) =
+      SubqueryAlias(Seq("spark_catalog", key._1, key._2), plan)
+    def relation(r: UnresolvedRelation, ctes: Set[String]): LogicalPlan = {
+      val parts = r.multipartIdentifier.map(_.toLowerCase)
+      val key = parts match {
+        case Seq(t) if !ctes(t) => (schema.getOrElse("default"), t)
+        case Seq(s, t) => (s, t)
+        case _ => return r // a CTE name, or a catalog-qualified name
       }
-    }
-    // time travel: each `<table> VERSION AS OF <n>` becomes a temp
-    // view over that table's committed v<n> snapshot (same
-    // register-then-drop discipline as the rowid shadows below).
-    // Spark's own parser reserves this syntax for v2 catalogs, so the
-    // rewrite happens here at the dialect layer.
-    val asOfRe = ("(?is)((?:`[^`]+`|[A-Za-z_]\\w*)" +
-      "(?:\\.(?:`[^`]+`|[A-Za-z_]\\w*))?)\\s+version\\s+as\\s+of\\s+(\\d+)").r
-    var searchFrom = 0
-    var scanning = true
-    while (scanning) {
-      asOfRe.findFirstMatchIn(sqlText.substring(searchFrom)) match {
-        case None => scanning = false
-        case Some(m) =>
-          val start = searchFrom + m.start
-          val end = searchFrom + m.end
-          if (inQuotes(sqlText, start)) searchFrom = end
-          else {
-            val td = lookup(m.group(1))
-            val ver = m.group(2).toLong
-            val view = s"__asof_${td.schema}_${td.name}_v$ver"
-            snapshotDf(td, ver).createOrReplaceTempView(view)
-            shadowed += view
-            sqlText = sqlText.substring(0, start) + view +
-              sqlText.substring(end)
-            searchFrom = start + view.length
-          }
-      }
-    }
-    // rowid shadow views: quote-aware identifier detection (a 'rowid'
-    // inside a string literal no longer triggers), applied only to
-    // tables the statement references — bare names in the session
-    // schema directly, schema-qualified names from ANY schema via a
-    // rewritten shadow-view name (temp views can't be qualified).
-    // Reference keeps rowid in the DF schema and hides it from `*`
-    // (meta_def.rs:385-395, core_util.rs:451-462); here `*` through a
-    // shadow view includes rowid — documented deviation.
-    if (containsIdent(sqlText, RowId)) {
-      // kv tables excluded: the key is the identity, there is no rowid
-      tables.values.filterNot(td => td.external || td.format == "kv")
-        .foreach { td =>
-        val shadowName = s"__rowid_${td.schema}_${td.name}"
-        val (rewritten, qualified) =
-          replaceQualifiedRef(sqlText, td.schema, td.name, shadowName)
-        if (qualified) {
-          sqlText = rewritten
-          readFull(td).createOrReplaceTempView(shadowName)
-          shadowed += shadowName
-        } else if (currentSchema.contains(td.schema) &&
-            containsIdent(sqlText, td.name)) {
-          readFull(td).createOrReplaceTempView(td.name)
-          shadowed += td.name
+      views.get(key) match {
+        case Some(body) =>
+          if (expanding(key)) throw Errors.generic(
+            s"view '${key._1}.${key._2}' is recursively defined")
+          alias(key, enginePlan(body, Some(key._1), expanding + key, tracker))
+        case None => tables.get(key) match {
+          case Some(td) if withRowid && !td.external && td.format != "kv" =>
+            alias(key, readFull(td).queryExecution.analyzed)
+          case None if parts.size == 1 &&
+              spark.sessionState.catalog.isTempView(parts) => r
+          case _ => r.copy(multipartIdentifier = Seq(key._1, key._2))
         }
       }
     }
-    try ResultSet(spark.sql(sqlText))
-    finally shadowed.foreach(v => spark.catalog.dropTempView(v))
+    def walk(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
+      case w: UnresolvedWith =>
+        var scope = ctes
+        val defs = w.cteRelations.map { case (name, body, depth) =>
+          val own = scope + name.toLowerCase
+          val resolved = walk(body, if (w.allowRecursion) own else scope)
+          scope = own
+          (name, resolved.asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = walk(w.child, scope), cteRelations = defs)
+      case RelationTimeTravel(r: UnresolvedRelation, None, Some(v)) =>
+        val td = baseTable(qualify(r.multipartIdentifier.map(_.toLowerCase), schema))
+        val ver = v.toLongOption.getOrElse(
+          throw Errors.generic(s"VERSION AS OF needs an integer version, got $v"))
+        alias((td.schema, td.name), snapshotDf(td, ver).queryExecution.analyzed)
+      case r: UnresolvedRelation => relation(r, ctes)
+      case _ => p.mapChildren(walk(_, ctes)).transformExpressions {
+        case q: SubqueryExpression => q.withNewPlan(walk(q.plan, ctes))
+      }
+    }
+    walk(parsed, Set.empty)
   }
 
   private def doExplain(stmt: String): GraftResult = {
@@ -835,7 +807,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     val innerLower = inner.trim.toLowerCase
     val df = (if (innerLower.startsWith("show")) doShow(inner.trim)
       else if (innerLower.startsWith("desc")) doDescribe(inner.trim)
-      else doSelect(inner)) match {
+      else ResultSet(doSelect(inner))) match {
       case ResultSet(d) => d
       case AffectedRows(n) =>
         throw Errors.generic(s"statement returned count $n, not rows")
@@ -1060,10 +1032,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       throw Errors.tableExists(name)
     }
     val query = m.group(3).trim
-    val df = doSelect(query) match {
-      case ResultSet(d) => d
-      case other => throw Errors.generic(s"CTAS query returned $other")
-    }
+    val df = doSelect(query)
     val lowered = df.schema.fieldNames.map(ident)
     if (lowered.distinct.length != lowered.length)
       throw GraftException(1060,
@@ -1331,7 +1300,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         // query and appending is the Spark-natural upgrade (SURVEY
         // §7.4 deviation, now supported rather than erroring).
         // Columns map by position, MySQL-style.
-        val src = doSelect(rest) match { case ResultSet(d) => d }
+        val src = doSelect(rest)
         if (src.columns.length != targetCols.size)
           throw GraftException(1136,
             s"Column count doesn't match value count (expected ${targetCols.size}, got ${src.columns.length})")
@@ -1654,11 +1623,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         s"cannot parse: ${stmt.take(60)} (expected ANALYZE TABLE <name>)"))
     val t = m.group(1).trim
     lookup(t) // 1146 before any scan if the table doesn't exist
-    doSelect(s"SELECT * FROM $t") match {
-      case ResultSet(df) =>
-        ResultSet(graft.operators.Profile.tableProfile(df))
-      case other => other
-    }
+    ResultSet(graft.operators.Profile.tableProfile(doSelect(s"SELECT * FROM $t")))
   }
 
   private def doOptimize(stmt: String): GraftResult = {
@@ -1778,7 +1743,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     * lock. Beyond the reference surface (it ships only the
     * Create_view_priv flag in SHOW GRANTS, no view execution —
     * `show_grants.rs:1283`); semantics follow MySQL except
-    * definer-schema name resolution (see [[doSelect]]). */
+    * definer-schema name resolution (see [[enginePlan]]). */
   private def doCreateView(stmt: String): GraftResult = {
     val m = "(?is)^create\\s+(or\\s+replace\\s+)?view\\s+(\\S+)\\s+as\\s+(.+)$".r
       .findFirstMatchIn(stmt)
@@ -2163,18 +2128,10 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
           case other =>
             throw Errors.generic(s"cannot parse USING alias: ${other.mkString(" ")}")
         }
-        val df = doSelect(sourcePart.substring(1, end)) match {
-          case ResultSet(d) => d
-          case other => throw Errors.generic(s"USING source returned $other")
-        }
-        (df, alias)
+        (doSelect(sourcePart.substring(1, end)), alias)
       } else {
         val (n, a) = parseRelAlias(sourcePart)
-        val df = doSelect(s"SELECT * FROM $n") match {
-          case ResultSet(d) => d
-          case other => throw Errors.generic(s"USING source returned $other")
-        }
-        (df, a.getOrElse(ident(n.split('.').last)))
+        (doSelect(s"SELECT * FROM $n"), a.getOrElse(ident(n.split('.').last)))
       }
     if (srcDf0.columns.contains("__merge_m"))
       throw Errors.generic("MERGE: source may not have a column named __merge_m")
@@ -2648,10 +2605,10 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     val name = ident(stmt.trim.split("\\s+", 2)(1))
     if (!schemas.contains(name) && name != InfoSchemaDb)
       throw Errors.unknownDb(name)
+    // session state only: SELECTs qualify bare names with it on the
+    // parsed plan, and mutating statements pin the shared Spark
+    // session's current database to it under the write lock
     active.currentSchema = Some(name)
-    // courtesy for library users driving `spark` directly; engine
-    // SELECTs re-pin per statement under analysisMutex
-    analysisMutex.synchronized(spark.catalog.setCurrentDatabase(name))
     AffectedRows(1)
   }
 

@@ -91,8 +91,8 @@ object SqlText {
   }
 
   /** True iff `pos` falls inside a `'…'`/`"…"`/`` `…` `` quoted run —
-    * used to keep regex-driven dialect rewrites (VERSION AS OF) out
-    * of string literals. */
+    * keeps regex-located clauses (INSERT's ON DUPLICATE KEY UPDATE)
+    * out of string literals. */
   def inQuotes(s: String, pos: Int): Boolean = {
     var quote: Char = 0
     var i = 0
@@ -103,97 +103,6 @@ object SqlText {
       i += 1
     }
     quote != 0
-  }
-
-  private def isIdentChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_'
-
-  /** True iff `name` occurs as an identifier outside string literals:
-    * word-boundary bare match or exact backtick-quoted match. Used
-    * for quote-aware `rowid` detection — a `'rowid'` inside a string
-    * literal is NOT an identifier reference (the reference resolves
-    * this through its AST pass, `core_util.rs:451-462`). */
-  def containsIdent(sql: String, name: String): Boolean = {
-    val lower = sql.toLowerCase
-    val n = name.toLowerCase
-    var i = 0
-    var quote: Char = 0
-    while (i < lower.length) {
-      val c = lower.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; i += 1 }
-      else if (c == '`') {
-        val j = lower.indexOf('`', i + 1)
-        if (j < 0) return false
-        if (lower.substring(i + 1, j) == n) return true
-        i = j + 1
-      } else {
-        if (lower.startsWith(n, i) &&
-          (i == 0 || !isIdentChar(lower.charAt(i - 1))) &&
-          (i + n.length >= lower.length ||
-            !isIdentChar(lower.charAt(i + n.length))))
-          return true
-        i += 1
-      }
-    }
-    false
-  }
-
-  /** Replace every occurrence of the qualified reference
-    * `schema.table` (optionally backticked, whitespace around the
-    * dot) outside string literals with `replacement`. Returns the
-    * rewritten SQL and whether anything matched — how shadow views
-    * stand in for schema-qualified tables (temp views cannot carry a
-    * schema qualifier). */
-  def replaceQualifiedRef(sql: String, schema: String, table: String,
-      replacement: String): (String, Boolean) = {
-    val sLow = schema.toLowerCase
-    val tLow = table.toLowerCase
-    // end position after an identifier equal to `name` at pos, or -1
-    def matchIdent(pos: Int, name: String): Int =
-      if (pos >= sql.length) -1
-      else if (sql.charAt(pos) == '`') {
-        val j = sql.indexOf('`', pos + 1)
-        if (j > 0 && sql.substring(pos + 1, j).toLowerCase == name) j + 1
-        else -1
-      } else {
-        val end = pos + name.length
-        if (end <= sql.length &&
-          sql.substring(pos, end).toLowerCase == name &&
-          (end == sql.length || !isIdentChar(sql.charAt(end)))) end
-        else -1
-      }
-    val out = new StringBuilder
-    var found = false
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else {
-        val prevOk = out.isEmpty ||
-          (!isIdentChar(out.last) && out.last != '.' && out.last != '`')
-        var matched = false
-        if (prevOk) {
-          val e1 = matchIdent(i, sLow)
-          if (e1 > 0) {
-            var p = e1
-            while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
-            if (p < sql.length && sql.charAt(p) == '.') {
-              p += 1
-              while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
-              val e2 = matchIdent(p, tLow)
-              if (e2 > 0) {
-                out ++= replacement; i = e2; matched = true; found = true
-              }
-            }
-          }
-        }
-        if (!matched) { out += c; i += 1 }
-      }
-    }
-    (out.result(), found)
   }
 
   /** Strip one layer of backticks/quotes from an identifier and

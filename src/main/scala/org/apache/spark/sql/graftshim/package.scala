@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge between public `Column` and Catalyst `Expression` for
   * custom expressions (Spark 4 wraps Column around ColumnNode; the
@@ -20,4 +22,19 @@ package object graftshim {
       : Seq[org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     ext.buildOptimizerRules(session)
+
+  /** `SparkSession.sql` with the parsing step supplied by the caller:
+    * `plan` builds the logical plan on a fresh tracker (recording its
+    * parse time there), and `Dataset.ofRows` analyzes it on the same
+    * tracker, with `session` active on the thread throughout, as in
+    * `sql`. Re-exported because `withActive` and `ofRows` are
+    * private[sql]; it lets a caller rewrite the parsed plan before
+    * analysis and still report every phase on one tracker. */
+  def ofRows(session: SparkSession)(plan: QueryPlanningTracker => LogicalPlan): DataFrame = {
+    val s = session.asInstanceOf[classic.SparkSession]
+    s.withActive {
+      val tracker = new QueryPlanningTracker
+      classic.Dataset.ofRows(s, plan(tracker), tracker)
+    }
+  }
 }

@@ -341,7 +341,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     e.sql("use ra")
     e.sql("create table t1 (id int, PRIMARY KEY(id))")
     e.sql("insert into t1 values (1)")
-    // 'rowid' inside a string literal must NOT trigger shadow views —
+    // 'rowid' inside a string literal must NOT trigger the full-image read —
     // `*` stays rowid-free
     assert(rows(e.sql("select *, 'rowid' as lit from t1")) ==
       Seq(Seq(1L, "rowid")))
@@ -353,8 +353,79 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = rows(e.sql("select rowid, id from rb.t2"))
     assert(q.size == 1 && q.head(1) == 9L)
     assert(q.head.head.asInstanceOf[String].length == 32)
-    // …and bare names still shadow in the session schema
+    // …and bare names still resolve in the session schema
     assert(rows(e.sql("select rowid, id from t1")).head(1) == 1L)
+    def rowidLen(sql: String) =
+      rows(e.sql(sql)).head.head.asInstanceOf[String].length
+    // backticked and qualified-uppercase names reference rowid
+    assert(rowidLen("select `rowid`, id from t1") == 32)
+    assert(rowidLen("select t1.ROWID, id from t1") == 32)
+    // literals and longer identifiers do not: `*` stays rowid-free
+    assert(rows(e.sql("select *, \"rowid\" as lit from t1")) ==
+      Seq(Seq(1L, "rowid")))
+    val quoted = rows(e.sql("select *, 'it''s rowid' as lit from t1"))
+    assert(quoted.size == 1 && quoted.head.size == 2 && quoted.head.head == 1L)
+    assert(rows(e.sql("select *, 2 as rowid2, 3 as growid from t1")) ==
+      Seq(Seq(1L, 2, 3)))
+    // a qualified name inside a literal is left as written
+    assert(rows(e.sql("select rowid, 'rb.t2' as lit from rb.t2")).head(1) ==
+      "rb.t2")
+    // backticked and spaced qualified names are table references
+    assert(rows(e.sql("select rowid, id from `rb`.`t2`")).head(1) == 9L)
+    assert(rows(e.sql("select rowid, id from rb . t2")).head(1) == 9L)
+    // a longer table name is a table of its own
+    e.sql("create table rb.t2x (id int, PRIMARY KEY(id))")
+    e.sql("insert into rb.t2x values (99)")
+    assert(rows(e.sql("select rowid, id from rb.t2x")).head(1) == 99L)
+  }
+
+  test("DML subqueries resolve bare names in their own session's schema") {
+    val e = freshEngine()
+    e.sql("create schema dq1"); e.sql("create schema dq2")
+    val a = e.newSession(); val b = e.newSession()
+    a.sql("use dq1"); b.sql("use dq2")
+    a.sql("create table t (id int, PRIMARY KEY(id))")
+    a.sql("insert into t values (1), (2), (3), (4)")
+    a.sql("create table u (id int, PRIMARY KEY(id))")
+    a.sql("insert into u values (1), (2)")
+    b.sql("create table u (id int, PRIMARY KEY(id))")
+    b.sql("insert into u values (3), (4)")
+    // B's read is the last statement before A's DELETE; the bare `u`
+    // in A's subquery must still mean dq1.u
+    assert(rows(b.sql("select count(*) from u")) == Seq(Seq(2L)))
+    assert(a.sql("delete from t where id in (select id from u)") ==
+      AffectedRows(2))
+    assert(rows(a.sql("select id from t order by id")) ==
+      Seq(Seq(3L), Seq(4L)))
+  }
+
+  test("views, VERSION AS OF and rowid resolve inside CTE definitions and subqueries") {
+    val e = freshEngine()
+    e.setVersionRetention(10) // every INSERT commits a version
+    e.sql("create schema tw"); e.sql("use tw")
+    e.sql("create table t (id int, v int, PRIMARY KEY(id))")
+    e.sql("insert into t values (1, 10), (2, 20)") // v1
+    e.sql("insert into t values (3, 30)")          // v2
+    e.sql("create view vw as select id, v from t where id <= 2")
+    def ids(sql: String) = rows(e.sql(sql)).map(_.head)
+    // a view
+    assert(ids("with c as (select id from vw) select id from c order by id") ==
+      Seq(1L, 2L))
+    assert(ids("select id from t where id in (select id from vw) order by id") ==
+      Seq(1L, 2L))
+    // a VERSION AS OF read
+    assert(ids("with c as (select id from t version as of 1) " +
+      "select id from c order by id") == Seq(1L, 2L))
+    assert(ids("select id from t where id not in " +
+      "(select id from t version as of 1)") == Seq(3L))
+    // a rowid reference
+    assert(ids("with c as (select rowid, id from t) " +
+      "select count(distinct rowid) from c") == Seq(3L))
+    assert(ids("select id from t where rowid in " +
+      "(select rowid from t where id = 2)") == Seq(2L))
+    // a view joined to itself
+    assert(rows(e.sql("select a.id, b.v from vw a join vw b on a.id = b.id " +
+      "order by a.id")) == Seq(Seq(1L, 10L), Seq(2L, 20L)))
   }
 
   test("show variables where filters on name and value") {
@@ -456,15 +527,30 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     sb.sql("create table t (id int, PRIMARY KEY(id))")
     sa.sql("insert into t values (1)")
     sb.sql("insert into t values (2)")
-    // readers resolve the bare name `t` in THEIR session schema on
-    // every statement while a third session churns the catalog with
-    // DDL + DML — any current-database cross-talk or half-swapped
-    // registration shows up as a wrong value or an exception
+    // each UPDATE commits v1, so the readers' VERSION AS OF 0 reads a
+    // retained snapshot, not the live image
+    sa.sql("update t set id = id")
+    sb.sql("update t set id = id")
+    sa.sql("create view w as select id from t")
+    sb.sql("create view w as select id from t")
+    // readers resolve the bare names `t` and `w` in THEIR session
+    // schema on every statement while a third session churns the
+    // catalog with DDL + DML — any current-database cross-talk or
+    // half-swapped registration shows up as a wrong value or an
+    // exception
     @volatile var problems = List.empty[String]
     def reader(s: GraftSession, expect: Long) = new Thread(() => {
       try (1 to 20).foreach { _ =>
         val got = rows(s.sql("select id from t")).map(_.head)
         if (got != Seq(expect)) problems ::= s"expected $expect got $got"
+        val view = rows(s.sql("select id from w")).map(_.head)
+        if (view != Seq(expect)) problems ::= s"view: expected $expect got $view"
+        val withRowid = rows(s.sql("select rowid, id from t"))
+        if (withRowid.map(_(1)) != Seq(expect) ||
+            withRowid.head.head.asInstanceOf[String].length != 32)
+          problems ::= s"rowid: expected $expect got $withRowid"
+        val asOf = rows(s.sql("select id from t version as of 0")).map(_.head)
+        if (asOf != Seq(expect)) problems ::= s"as of: expected $expect got $asOf"
       } catch { case t: Throwable => problems ::= t.toString }
     })
     val ddl = new Thread(() => {
@@ -957,11 +1043,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("thousand-view catalog: statements stay correct and O(referenced views)") {
-    // pins the doSelect view-expansion pre-filter: with 1000 views
-    // registered, a statement referencing NONE of them must not pay
-    // the per-view quote-aware ident scan (the pre-filter skips on a
-    // cheap substring miss), and references through any single view —
-    // bare, qualified, nested in FROM — still resolve exactly.
+    // view expansion looks up each relation of the parsed plan in the
+    // view map: with 1000 views registered, a statement referencing
+    // NONE of them pays nothing per view, and references through any
+    // single view — bare, qualified, nested in FROM — still resolve
+    // exactly.
     val e = freshEngine()
     e.sql("create schema vmany"); e.sql("use vmany")
     e.sql("create table base (id int, v int, PRIMARY KEY(id))")

@@ -106,36 +106,4 @@ class SqlTextPropertySpec extends AnyFunSuite {
       assert(SqlText.ident(s.toUpperCase) == s.toLowerCase)
     }
   }
-
-  test("containsIdent: word-boundary, quote-aware, backtick-aware") {
-    assert(SqlText.containsIdent("select rowid from t", "rowid"))
-    assert(SqlText.containsIdent("select t.ROWID from t", "rowid"))
-    assert(SqlText.containsIdent("select `rowid` from t", "rowid"))
-    assert(!SqlText.containsIdent("select 'rowid' from t", "rowid"))
-    assert(!SqlText.containsIdent("select \"rowid\" from t", "rowid"))
-    assert(!SqlText.containsIdent("select rowid2, growid from t", "rowid"))
-    assert(!SqlText.containsIdent("select 'it''s rowid' from t", "rowid"))
-    // generated identifiers never false-positive as substrings
-    samples(Gen.alphaNumStr.suchThat(s => s.nonEmpty && s != "x")).foreach { s =>
-      val name = "zz" + s.take(6).toLowerCase
-      assert(SqlText.containsIdent(s"select $name from t", name))
-      assert(!SqlText.containsIdent(s"select ${name}x from t", name))
-      assert(!SqlText.containsIdent(s"select '$name' from t", name))
-    }
-  }
-
-  test("replaceQualifiedRef rewrites table refs, not literals or other names") {
-    def rq(sql: String) = SqlText.replaceQualifiedRef(sql, "s1", "t1", "V")
-    assert(rq("select rowid from s1.t1") == ("select rowid from V", true))
-    assert(rq("select * from `s1`.`t1` x") == ("select * from V x", true))
-    assert(rq("select * from s1 . t1") == ("select * from V", true))
-    assert(rq("select * from S1.T1") == ("select * from V", true))
-    assert(rq("select 's1.t1' from dual") == ("select 's1.t1' from dual", false))
-    assert(rq("select * from s1.t12") == ("select * from s1.t12", false))
-    assert(rq("select * from xs1.t1") == ("select * from xs1.t1", false))
-    assert(rq("select * from other.t1") == ("select * from other.t1", false))
-    // joins: every occurrence rewritten
-    assert(rq("select * from s1.t1 a join s1.t1 b on a.id = b.id") ==
-      ("select * from V a join V b on a.id = b.id", true))
-  }
 }
