@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
@@ -8,9 +9,12 @@ import graft.operators.Graph
 /** Plan dumps for operator pipelines whose PUBLIC entry points
   * materialize eagerly (localCheckpoint) and therefore explain as a
   * useless RDD-scan stub: this main rebuilds the LAZY internal
-  * pipeline the operator runs, from the operator's own pieces, and
-  * dumps its formatted plan — the same trick PlanSpec uses for its
-  * shape pins.
+  * pipeline the operator runs, from the operator's own pieces, runs it
+  * to the end with its rows discarded (as a `noop` write would), and
+  * dumps its formatted plan. The dump shows the FINAL adaptive plan
+  * beside the initial one: Spark plans a persisted frame with unknown
+  * partitioning until its cache is built, so only the final plan shows
+  * which exchanges above it AQE dropped.
   * `runMain graft.PlanDump <name1,name2,...> [sfDir] [outDir]`. */
 object PlanDump {
   /** The battery's co-purchase graph (p75, p86) as its adjacency. */
@@ -53,8 +57,9 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     outDir.foreach(d => new java.io.File(d).mkdirs())
     names.foreach { name =>
-      val txt = pipelines(name)(spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      val qe = pipelines(name)(spark, sfDir).queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("planDump"))(qe.toRdd.foreach(_ => ()))
+      val txt = qe.explainString(FormattedMode)
       println(s"==== $name ====")
       println(txt)
       outDir.foreach { d =>

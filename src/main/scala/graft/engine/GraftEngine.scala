@@ -57,17 +57,21 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
   private var views: Map[(String, String), String] = Map.empty
   private var globals: Map[String, String] = Map.empty
 
-  // Engine sessions get the engine's optimizer rules automatically: a
-  // pure `y < x <= y+W` join plans as two hash joins instead of a
-  // nested loop, a small engine-table read runs as one partition with
-  // no exchange, and a SELECT of constants answers from the driver
-  // (Spark's ConvertToLocalRelation then folds a LIMIT above it).
-  // Library users opt in to the range-join rewrite via
+  // Engine sessions get the engine's optimizer rules and planner
+  // strategy automatically: a pure `y < x <= y+W` join plans as two
+  // hash joins instead of a nested loop, a small engine-table read runs
+  // as one partition with no exchange, a SELECT of constants answers
+  // from the driver (Spark's ConvertToLocalRelation then folds a LIMIT
+  // above it), and a file scan's filter constants are bound outside the
+  // generated code, so a statement of a shape that ran before compiles
+  // nothing. Library users opt in to the range-join rewrite via
   // spark.sql.extensions or experimental.extraOptimizations.
   spark.experimental.extraOptimizations ++= Seq(graft.plans.BandedRangeJoin,
     graft.plans.SingleSplitScan, graft.plans.FoldConstantSelect,
     org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation)
     .filterNot(spark.experimental.extraOptimizations.contains)
+  spark.experimental.extraStrategies ++= Seq(graft.plans.BindFilterLiterals)
+    .filterNot(spark.experimental.extraStrategies.contains)
 
   // ---- session registry (SHOW PROCESSLIST / KILL) ------------------
   // Connection pools (HikariCP health probes, mysqladmin) issue SHOW
@@ -723,7 +727,8 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     *    catches the cycles a CREATE OR REPLACE can introduce;
     *  - every other single-part name is qualified with `schema`
     *    (`default` when none is selected), except CTE names in scope
-    *    and Spark temp views (`dual`);
+    *    and Spark temp views (`dual`); any other two-part name (a path
+    *    read such as ``parquet.`/Dir` ``) stays as parsed;
     *  - when the statement names an attribute `rowid`, each COW table
     *    reads through its full image, rowid included. The reference
     *    hides rowid from `*` (`meta_def.rs:385-395`); in such a
@@ -766,6 +771,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
             alias(key, readFull(td).queryExecution.analyzed)
           case None if parts.size == 1 &&
               spark.sessionState.catalog.isTempView(parts) => r
+          case None if parts.size == 2 => r // as parsed: a path read is case-sensitive
           case _ => r.copy(multipartIdentifier = Seq(key._1, key._2))
         }
       }
@@ -1755,7 +1761,12 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     if (tables.contains((vs, vn))) throw Errors.tableExists(vn)
     if (views.contains((vs, vn)) && !orReplace) throw Errors.tableExists(vn)
     val body = m.group(3).trim
-    doSelect(body) // validate: full analysis, result discarded
+    // validate: full analysis, result discarded, with the body's names
+    // resolved in the view's schema as every read resolves them. The
+    // view itself is not yet being expanded: a replace that closes a
+    // cycle through the old definition succeeds and its reads fail,
+    // as in MySQL.
+    graftshim.ofRows(spark)(enginePlan(body, Some(vs), Set.empty, _))
     views += (vs, vn) -> body
     persistInfoSchema(Seq("views", "tables"))
     AffectedRows(0)

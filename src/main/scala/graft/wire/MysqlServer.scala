@@ -4,11 +4,11 @@ import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
 
 import graft.engine.{AffectedRows, GraftEngine, GraftException, GraftResult,
   GraftSession, ResultSet}
@@ -47,7 +47,10 @@ import Packets._
   * `LocalTableScanExec` — goes out with no Spark job. Every other
   * result streams in batches of up to `defaultParallelism` partitions,
   * one Spark job per batch: a result of that many partitions or fewer
-  * costs one job.
+  * costs one job. Rows are read column by column from Spark's internal
+  * rows, with no encoder, and each job runs a named class, not a
+  * lambda: a result costs no code generation and no closure cleaning
+  * of its own (see [[foreachRow]]).
   */
 class MysqlServer(engine: GraftEngine, port: Int = 0) {
 
@@ -415,11 +418,12 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
           seq = send(seq, columnDef(session.currentSchema.getOrElse(""), "", f.name, tc))
         }
         seq = send(seq, eof())
+        val columns = schema.fields.zipWithIndex.map { case (f, i) => column(f.dataType, i) }
         val rowErr =
           try {
             foreachRow(df) { row =>
-              val cells = tcs.indices.map(i =>
-                if (row.isNullAt(i)) None else Some(row.get(i)))
+              val cells = columns.indices.map(i =>
+                if (row.isNullAt(i)) None else Some(columns(i)(row)))
               seq = send(seq,
                 if (binary) binaryRow(cells.zip(tcs))
                 else textRow(cells.map(_.map(String.valueOf))))
@@ -435,33 +439,63 @@ class MysqlServer(engine: GraftEngine, port: Int = 0) {
   }
 
   /** Hands a result's rows to `f` in order, from the plan its
-    * DataFrame already built. A `LocalTableScanExec` (SHOW, DESCRIBE,
-    * EXPLAIN, VALUES, a SELECT of constants) holds its rows on the
-    * driver, and `collect()` returns them with no Spark job. Any other
-    * plan runs in batches of up to `defaultParallelism` partitions,
-    * one `runJob` each, in partition order (the shape of
-    * `executeTake`), so driver memory stays bounded at one batch. The
-    * batches run inside one SQL execution, so SQL and
-    * `QueryExecutionListener` callbacks fire as for any action. */
-  private def foreachRow(df: DataFrame)(f: Row => Unit): Unit = {
+    * DataFrame already built, inside one SQL execution, so SQL and
+    * `QueryExecutionListener` callbacks fire as for any action. A
+    * `LocalTableScanExec` (SHOW, DESCRIBE, EXPLAIN, VALUES, a SELECT
+    * of constants) holds its rows on the driver and runs no Spark job.
+    * Any other plan runs in batches of up to `defaultParallelism`
+    * partitions, one `runJob` each, in partition order (the shape of
+    * `executeTake`), so driver memory stays bounded at one batch.
+    *
+    * Nothing here costs per statement what a statement of the same
+    * shape already paid: rows reach `f` as Spark's internal rows (read
+    * by [[column]], not through an encoder, whose deserializer is
+    * analyzed and code-generated per call), and each job runs
+    * [[MysqlServer.CopyRows]], a named class that `runJob`'s closure
+    * cleaner passes over, where a lambda would be looked up and parsed
+    * with ASM twice per job. */
+  private def foreachRow(df: DataFrame)(f: InternalRow => Unit): Unit = {
     val qe = df.queryExecution
-    qe.executedPlan match {
-      case _: LocalTableScanExec => df.collect().foreach(f)
-      case plan =>
-        val toRow = ExpressionEncoder(df.schema).resolveAndBind()
-          .createDeserializer()
-        SQLExecution.withNewExecutionId(qe, Some("wireResult")) {
+    SQLExecution.withNewExecutionId(qe, Some("wireResult")) {
+      qe.executedPlan match {
+        case local: LocalTableScanExec => local.executeCollect().foreach(f)
+        case plan =>
           plan.resetMetrics()
           val rdd = plan.execute()
           val sc = rdd.sparkContext
           val n = rdd.getNumPartitions
           val step = sc.defaultParallelism
           (0 until n by step).foreach { from =>
-            sc.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray,
-              from until math.min(from + step, n))
-              .foreach(_.foreach(r => f(toRow(r))))
+            val parts = from until math.min(from + step, n)
+            val batch = new Array[Array[InternalRow]](parts.length)
+            sc.runJob(rdd, new MysqlServer.CopyRows, parts,
+              (i: Int, rows: Array[InternalRow]) => batch(i) = rows)
+            batch.foreach(_.foreach(f))
           }
-        }
+      }
     }
+  }
+
+  /** Reads column `i` of a non-null cell as an external `Row` would
+    * hold it: the engine's column types (int, float, char) directly,
+    * any other type through Catalyst's converter. */
+  private def column(t: DataType, i: Int): InternalRow => Any = t match {
+    case LongType => _.getLong(i)
+    case DoubleType => _.getDouble(i)
+    case _: StringType => _.getUTF8String(i).toString
+    case _ =>
+      val toScala = CatalystTypeConverters.createToScalaConverter(t)
+      r => toScala(r.get(i, t))
+  }
+}
+
+object MysqlServer {
+  /** A result partition's rows, copied out of the scan's reused row
+    * buffer. */
+  final class CopyRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow])
+      with Serializable {
+    def apply(context: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      rows.map(_.copy()).toArray
   }
 }

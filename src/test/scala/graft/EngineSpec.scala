@@ -428,6 +428,32 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "order by a.id")) == Seq(Seq(1L, 10L), Seq(2L, 20L)))
   }
 
+  test("a path read keeps the case of its path") {
+    val e = freshEngine()
+    e.sql("create schema pc"); e.sql("use pc")
+    e.sql("create table t (id int, name char, PRIMARY KEY(id))")
+    val src = s"${ScratchDirs.create("graft_path_case_")}/Upper/Src"
+    spark.range(1, 4).selectExpr("id", "concat('n', id) as name").write.parquet(src)
+    assert(e.sql(s"insert into t select id, name from parquet.`$src`") == AffectedRows(3))
+    assert(rows(e.sql(s"select count(*) from parquet.`$src`")) == Seq(Seq(3L)))
+    assert(rows(e.sql("select id, name from t order by id")) ==
+      Seq(Seq(1L, "n1"), Seq(2L, "n2"), Seq(3L, "n3")))
+  }
+
+  test("create view validates its body in the view's schema") {
+    val e = freshEngine()
+    e.sql("create schema pa"); e.sql("create schema pb"); e.sql("use pa")
+    e.sql("create table t (id int, PRIMARY KEY(id))")
+    e.sql("insert into t values (1)")
+    // only pa.t exists: the body's bare `t` means pb.t, which is missing
+    assert(intercept[GraftException](
+      e.sql("create view pb.v as select id from t")).code == 1146)
+    e.sql("create table pb.t (id int, PRIMARY KEY(id))")
+    e.sql("insert into pb.t values (2), (3)")
+    assert(e.sql("create view pb.v as select id from t") == AffectedRows(0))
+    assert(rows(e.sql("select * from pb.v order by id")) == Seq(Seq(2L), Seq(3L)))
+  }
+
   test("show variables where filters on name and value") {
     val v = rows(eng.sql(
       "show variables where Variable_name = 'lower_case_table_names'"))

@@ -21,7 +21,9 @@ import graft.wire.{MysqlServer, TextClient}
   * SELECT of constants folds to a local relation and runs no job
   * either. A SELECT that reads a multi-partition scan streams in
   * batches of up to `defaultParallelism` (4) partitions, one job per
-  * batch, and returns exactly the rows of `collect()` in order.
+  * batch, and returns exactly the rows of `collect()` in order. The
+  * wire reads every column type from Spark's internal rows with no
+  * encoder; each cell goes out as the encoder's `Row` value would.
   */
 class LocalResultSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -253,5 +255,50 @@ class LocalResultSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try check(s"select id, s, x from $big order by x desc", 5, 2)
     finally spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+  }
+
+  /** Doubles by their bits, so NaN and -0.0 compare exactly. */
+  private def bits(rows: Seq[Seq[Option[Any]]]): Seq[Seq[Option[Any]]] =
+    rows.map(_.map(_.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case other => other
+    }))
+
+  test("every column type reaches both protocols as the encoder's Row " +
+    "gives it, NULL in each column") {
+    def check(sql: String, n: Int): Unit = {
+      val want = eng.query(sql).collect().toSeq
+      assert(want.length == n, sql)
+      assert(client.query(sql)._2 == text(want), sql)
+      val (id, _) = client.prepare(sql)
+      assert(bits(client.executeQuery(id, Nil)._2) == bits(binary(want)), sql)
+    }
+    // the engine's column types, NULL in each
+    eng.sql("create table typed (id int, n int, name char, score float, PRIMARY KEY(id))")
+    eng.sql("insert into typed values (1, 7, 'ann', -0.0), (2, NULL, 'bo', 2.5), " +
+      "(3, -9223372036854775808, NULL, 1e300), (4, 0, 'é', NULL)")
+    check("select id, n, name, score, score * 1e308d, try_cast(n as int), n > 0, " +
+      "try_cast(score as decimal(12, 3)), date_add(date'2020-02-28', try_cast(n as int)), " +
+      "timestamp_seconds(id), array(n, id), named_struct('x', n, 'y', name), " +
+      "map('k', name), try_cast(score as float), cast(id as short), cast(id as byte) " +
+      "from typed order by id", 4)
+    // a multi-partition ORDER BY over a path read: NULL, NaN, -0.0 and
+    // infinities in every value column
+    val src = s"$wh/typed_src"
+    (0 until 4).foreach { f =>
+      spark.range(f * 10, f * 10 + 10, 1, 1).selectExpr("id as k",
+        "case when id % 4 = 0 then null else id * 1000003 - 20000000 end as l",
+        "case id % 5 when 0 then null when 1 then double('NaN') when 2 then -0.0d " +
+          "when 3 then double('-Infinity') else id / 7d end as d",
+        "case when id % 3 = 0 then null else concat('s', id, 'ü') end as s",
+        "case when id % 6 = 0 then null else id % 2 = 0 end as b",
+        "case when id % 7 = 0 then null else cast(id / 3 as decimal(12, 3)) end as dec",
+        "case when id % 8 = 0 then null else date_add(date'1969-12-25', cast(id as int)) end as dt",
+        "case when id % 9 = 0 then null else array(id, null) end as arr")
+        .write.mode("append").parquet(src)
+    }
+    val sql = s"select k, l, d, s, b, dec, dt, arr from parquet.`$src` order by k desc"
+    assert(eng.query(sql).queryExecution.toRdd.getNumPartitions >= 4)
+    check(sql, 40)
   }
 }
