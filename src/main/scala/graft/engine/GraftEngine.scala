@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession, graftshim}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeIntoTable, OneRowRelation, SubqueryAlias, UnresolvedWith, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.{ExplainMode, ExtendedMode, SimpleMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
@@ -117,13 +117,11 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     * excludes readers (they would otherwise see a half-swapped COW
     * registration), but readers never serialize behind each other —
     * including EXPLAIN ANALYZE, which executes its plan under the
-    * read lock. A read's analysis consults no shared Spark session
-    * state: [[doSelect]] resolves every engine name on the parsed
-    * plan, so reads from different sessions analyze in parallel. The
-    * shared session's current database is set only under the write
-    * lock, for the DML expressions that still resolve through it.
-    * The DataFrame a read statement returns executes entirely outside
-    * engine locks. */
+    * read lock. No statement's analysis consults shared Spark session
+    * state: reads and writes resolve every engine name on the parsed
+    * plan ([[resolveNames]]), so reads from different sessions analyze
+    * in parallel. The DataFrame a read statement returns executes
+    * entirely outside engine locks. */
   private val lock = new java.util.concurrent.locks.ReentrantReadWriteLock()
 
   /** The session whose statement is executing on THIS thread —
@@ -200,13 +198,6 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     activeTL.set(ses)
     l.lock()
     try {
-      // DML conditions (`expr(...)`) resolve bare names in their
-      // subqueries through the shared session's current database. The
-      // write lock excludes every other statement, and no read
-      // consults it, so pinning it here is race-free. A schema another
-      // session dropped falls back to `default`, as with none selected.
-      if (!readOnly) spark.catalog.setCurrentDatabase(
-        ses.currentSchema.filter(schemas.contains).getOrElse("default"))
       // MySQL implicit commit: DDL ends any open transaction BEFORE
       // executing — a txn can never hold undo entries for a table
       // whose shape (or existence) changed under it
@@ -230,9 +221,8 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       else if (lower.matches("(?s)alter\\s+table\\b.*")) doAlterTable(stmt)
       else if (lower.startsWith("insert") ||
         lower.startsWith("replace")) doInsert(stmt)
-      else if (lower.startsWith("update")) doUpdate(stmt)
-      else if (lower.startsWith("delete")) doDelete(stmt)
-      else if (lower.startsWith("merge")) doMerge(stmt)
+      else if (lower.startsWith("update") || lower.startsWith("delete") ||
+        lower.startsWith("merge")) doWrite(stmt)
       else if (lower.startsWith("optimize")) doOptimize(stmt)
       else if (lower.startsWith("vacuum")) doVacuum(stmt)
       else if (lower.startsWith("restore")) doRestore(stmt)
@@ -714,11 +704,25 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
   private def doSelect(stmt: String): DataFrame =
     graftshim.ofRows(spark)(enginePlan(stmt, currentSchema, Set.empty, _))
 
-  /** Parse `stmt` after `@@var`/`database()` substitution and resolve
-    * the engine's names on the plan, as the reference does on its AST
-    * before DataFusion plans (`fix_statement`, `execution.rs:157-333`).
-    * One walk over the plan, its subquery plans and its CTE
-    * definitions:
+  /** Parse `stmt` after `@@var`/`database()` substitution, timed as
+    * `tracker`'s parsing phase. */
+  private def parseStatement(stmt: String, schema: Option[String],
+      tracker: QueryPlanningTracker): LogicalPlan = {
+    val text = substituteVars(stmt, globals, Version, schema)
+    tracker.measurePhase(QueryPlanningTracker.PARSING)(
+      spark.sessionState.sqlParser.parsePlan(text))
+  }
+
+  private def enginePlan(stmt: String, schema: Option[String],
+      expanding: Set[(String, String)],
+      tracker: QueryPlanningTracker): LogicalPlan =
+    resolveNames(parseStatement(stmt, schema, tracker), schema, expanding, tracker)
+
+  /** Resolve the engine's names on a parsed plan, as the reference
+    * does on its AST before DataFusion plans (`fix_statement`,
+    * `execution.rs:157-333`). SELECT and the write statements
+    * ([[doWrite]]) share it. One walk over the plan, its expressions'
+    * subquery plans and its CTE definitions:
     *  - `t VERSION AS OF n` reads the table's committed v<n> snapshot
     *    (Spark's analyzer reserves that syntax for v2 catalogs);
     *  - an engine view expands to its stored body, resolved by this
@@ -736,12 +740,9 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     * The walk carries the CTE names in scope down the tree, which a
     * bottom-up transform cannot. Nothing here touches shared session
     * state, so concurrent reads analyze in parallel. */
-  private def enginePlan(stmt: String, schema: Option[String],
+  private def resolveNames(parsed: LogicalPlan, schema: Option[String],
       expanding: Set[(String, String)],
       tracker: QueryPlanningTracker): LogicalPlan = {
-    val text = substituteVars(stmt, globals, Version, schema)
-    val parsed = tracker.measurePhase(QueryPlanningTracker.PARSING)(
-      spark.sessionState.sqlParser.parsePlan(text))
     def namesRowid(p: LogicalPlan): Boolean =
       p.expressions.exists(_.exists {
         case a: UnresolvedAttribute => a.nameParts.last.equalsIgnoreCase(RowId)
@@ -1297,7 +1298,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         // constant-expression evaluation via Spark SQL, the way the
         // reference folds VALUES cells through DataFusion physical
         // exprs (insert.rs:117-166)
-        (spark.sql(s"SELECT * FROM VALUES ${rows.mkString(", ")} " +
+        (doSelect(s"SELECT * FROM VALUES ${rows.mkString(", ")} " +
           s"AS __ins(${targetCols.mkString(", ")})"), Some(rows.size.toLong))
       } else if (restLower.startsWith("select") ||
         restLower.startsWith("with") || restLower.startsWith("(")) {
@@ -1390,12 +1391,6 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       d.exists() && d.listFiles().exists(_.getName.endsWith(".parquet"))
     }
 
-  private def whereSplit(s: String): (String, Option[String]) = {
-    val i = indexOfKeyword(s, "where")
-    if (i < 0) (s, None)
-    else (s.substring(0, i), Some(s.substring(i + 5)))
-  }
-
   /** INSERT IGNORE: new rows conflicting with EXISTING data on any
     * unique key skip silently; the rest land through the same
     * append paths plain INSERT uses (in-place append at the grace
@@ -1473,28 +1468,36 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         val keys = td.allConstraints.map(_._2)
         if (keys.isEmpty) throw Errors.generic(
           "ON DUPLICATE KEY UPDATE requires a PRIMARY KEY or UNIQUE key")
-        val assignments = splitTopLevel(odku.get, ',').map { a =>
+        // each right-hand side parses as a Spark expression, VALUES(col)
+        // becomes the incoming row's column (aliased __new_*) on the
+        // tree, and its subqueries resolve as an UPDATE's do
+        val parsed = splitTopLevel(odku.get, ',').map { a =>
           val i = a.indexOf('=')
           if (i < 0) throw Errors.generic(s"bad assignment: $a")
-          (ident(a.substring(0, i)), a.substring(i + 1).trim)
+          Assignment(UnresolvedAttribute(Seq(ident(a.substring(0, i)))),
+            spark.sessionState.sqlParser.parseExpression(rewrite(a.substring(i + 1)))
+              .transform {
+                case f: UnresolvedFunction if f.nameParts.size == 1 &&
+                    f.nameParts.head.equalsIgnoreCase("values") =>
+                  f.arguments match {
+                    case Seq(UnresolvedAttribute(c)) =>
+                      UnresolvedAttribute(Seq("__new_" + c.last.toLowerCase))
+                    case _ => throw Errors.generic(
+                      s"VALUES() takes one column name: ${a.trim}")
+                  }
+              })
         }
-        assignments.map(_._1).filterNot(c => td.columns.exists(_.name == c))
-          .foreach(c => throw Errors.unknownColumn(c, td.name))
-        if (assignments.exists(a => td.primaryKey.contains(a._1)))
+        val assignments = resolveNames(UpdateTable(OneRowRelation(), parsed, None),
+            currentSchema, Set.empty, new QueryPlanningTracker) match {
+          case u: UpdateTable => assignedColumns(u.assignments, td)
+        }
+        if (assignments.keys.exists(td.primaryKey.contains))
           throw Errors.generic(
             "ON DUPLICATE KEY UPDATE cannot change the PRIMARY KEY")
-        // VALUES(col) → the incoming row's column (aliased __new_*)
-        def rewriteValues(e: String): String =
-          "(?i)values\\s*\\(\\s*(`?[A-Za-z_]\\w*`?)\\s*\\)".r
-            .replaceAllIn(e, mm => "__new_" + ident(mm.group(1)))
         def applyAssignments(joined: DataFrame): DataFrame =
           joined.select(
             col(RowId) +: td.columns.map { c =>
-              assignments.find(_._1 == c.name) match {
-                case Some((_, rhs)) =>
-                  expr(rewrite(rewriteValues(rhs))).cast(c.sparkType).as(c.name)
-                case None => col(c.name)
-              }
+              assignments.get(c.name).fold(col(c.name))(_.cast(c.sparkType).as(c.name))
             }: _*)
         // MySQL's affected arithmetic counts 2 only for rows the
         // assignments CHANGED — a matched row whose post-image is
@@ -1502,8 +1505,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         // "unchanged").
         val changedCond = assignments.map { case (c, rhs) =>
           val cd = td.columns.find(_.name == c).get
-          not(expr(rewrite(rewriteValues(rhs))).cast(cd.sparkType)
-            <=> col(c))
+          not(rhs.cast(cd.sparkType) <=> col(c))
         }.reduce(_ || _)
         // resolve conflicts against EVERY unique index in MySQL's
         // index order — PRIMARY first, then UNIQUE keys as declared:
@@ -1560,28 +1562,60 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     }
   }
 
-  private def doUpdate(stmt: String): GraftResult = {
-    val m = "(?is)^update\\s+(\\S+)\\s+set\\s+(.*)$".r.findFirstMatchIn(stmt)
-      .getOrElse(throw Errors.generic(s"cannot parse: $stmt"))
-    val td = lookup(m.group(1))
+  /** UPDATE, DELETE and MERGE, parsed once by Spark's parser into
+    * `UpdateTable`, `DeleteFromTable` or `MergeIntoTable`. The target
+    * must name a writable base table; its alias, or else the table's
+    * own name, qualifies the target's columns. Everything else in the
+    * statement (conditions, assignments, a MERGE source) goes through
+    * [[resolveNames]], so engine views, `VERSION AS OF`, `rowid` and
+    * the session schema resolve as in a SELECT; each expression then
+    * binds to the target frame as a `Column`. */
+  private def doWrite(stmt: String): GraftResult = {
+    val tracker = new QueryPlanningTracker
+    def unparsed = Errors.generic(s"cannot parse: ${stmt.take(60)}")
+    val (target, rest) = parseStatement(stmt, currentSchema, tracker) match {
+      case u: UpdateTable => (u.table, u.copy(table = OneRowRelation()))
+      case d: DeleteFromTable => (d.table, d.copy(table = OneRowRelation()))
+      case m: MergeIntoTable => (m.targetTable, m.copy(targetTable = OneRowRelation()))
+      case _ => throw unparsed
+    }
+    val (rel, alias) = target match {
+      case SubqueryAlias(a, r: UnresolvedRelation) => (r, Some(a.name))
+      case r: UnresolvedRelation => (r, None)
+      case _ => throw unparsed
+    }
+    val td = baseTable(qualify(rel.multipartIdentifier.map(_.toLowerCase), currentSchema))
     requireWritable(td)
-    val (setPart, whereOpt) = whereSplit(m.group(2))
-    val assigns = splitTopLevel(setPart, ',').map { a =>
-      val eq = a.indexOf('=')
-      if (eq < 0) throw Errors.generic(s"bad assignment: $a")
-      val c = ident(a.substring(0, eq))
+    val tA = alias.getOrElse(td.name)
+    resolveNames(rest, currentSchema, Set.empty, tracker) match {
+      case u: UpdateTable => doUpdate(td, tA, assignedColumns(u.assignments, td),
+        u.condition.map(graftshim.column).getOrElse(lit(true)))
+      case d: DeleteFromTable => doDelete(td, tA, graftshim.column(d.condition))
+      case m: MergeIntoTable => doMerge(td, tA, m)
+    }
+  }
+
+  /** A SET list as target column → value, each column checked
+    * against `td` (1054). */
+  private def assignedColumns(assignments: Seq[Assignment],
+      td: TableDef): Map[String, Column] =
+    assignments.map { a =>
+      val c = a.key match {
+        case UnresolvedAttribute(parts) => parts.last.toLowerCase
+        case k => throw Errors.generic(s"bad assignment target: $k")
+      }
       if (!td.columns.exists(_.name == c)) throw Errors.unknownColumn(c, td.name)
-      c -> a.substring(eq + 1).trim
+      c -> graftshim.column(a.value)
     }.toMap
-    val cond = whereOpt.map(w => expr(rewrite(w))).getOrElse(lit(true))
-    if (td.format == "kv") return kvUpdate(td, assigns, cond)
+
+  private def doUpdate(td: TableDef, alias: String,
+      assigns: Map[String, Column], cond: Column): GraftResult = {
+    if (td.format == "kv") return kvUpdate(td, alias, assigns, cond)
     // query-then-mutate: assignments see the consistent pre-image
     // (update.rs:55-108; SURVEY §3.2)
-    val n = mutateVersion(td, cond, sub => {
+    val n = mutateVersion(td, alias, cond, sub => {
       val updated = sub.where(cond).select(col(RowId) +: td.columns.map { c =>
-        assigns.get(c.name)
-          .map(e => expr(rewrite(e)).cast(c.sparkType).as(c.name))
-          .getOrElse(col(c.name))
+        assigns.get(c.name).fold(col(c.name))(_.cast(c.sparkType).as(c.name))
       }: _*)
       sub.where(not(coalesce(cond, lit(false)))).unionByName(updated)
     })
@@ -1976,76 +2010,37 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     registerTable(ntd)
   }
 
-  private def doDelete(stmt: String): GraftResult = {
-    val m = "(?is)^delete\\s+from\\s+(\\S+)\\s*(.*)$".r.findFirstMatchIn(stmt)
-      .getOrElse(throw Errors.generic(s"cannot parse: $stmt"))
-    val td = lookup(m.group(1))
-    requireWritable(td)
-    val rest = m.group(2).trim
-    val whereOpt =
-      if (rest.isEmpty) None
-      else if (rest.toLowerCase.startsWith("where")) Some(rest.substring(5))
-      else throw Errors.generic(s"cannot parse: $stmt")
-    val cond = whereOpt.map(w => expr(rewrite(w))).getOrElse(lit(true))
-    if (td.format == "kv") return kvDelete(td, cond)
-    val n = mutateVersion(td, cond,
-      sub => sub.where(not(coalesce(cond, lit(false)))))
-    AffectedRows(n)
-  }
+  private def doDelete(td: TableDef, alias: String, cond: Column): GraftResult =
+    if (td.format == "kv") kvDelete(td, alias, cond)
+    else AffectedRows(mutateVersion(td, alias, cond,
+      sub => sub.where(not(coalesce(cond, lit(false))))))
 
   // ------------------------------------------------------------------
   // MERGE
   // ------------------------------------------------------------------
 
-  private def parseRelAlias(s: String): (String, Option[String]) =
-    s.trim.split("\\s+").toSeq match {
-      case Seq(n) => (n, None)
-      case Seq(n, a) => (n, Some(ident(a)))
-      case Seq(n, as_, a) if as_.equalsIgnoreCase("as") => (n, Some(ident(a)))
-      case _ => throw Errors.generic(s"cannot parse relation: $s")
-    }
-
-  /** Positions where a `WHEN MATCHED` / `WHEN NOT MATCHED` clause
-    * starts (depth 0, outside quotes) — a `CASE WHEN` inside an
-    * assignment expression does not qualify because its WHEN is never
-    * followed by the MATCHED/NOT keyword. */
-  private def whenClauseStarts(s: String): Seq[Int] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var from = 0
-    while (from < s.length) {
-      val i = indexOfKeyword(s.substring(from), "when")
-      if (i < 0) from = s.length
-      else {
-        val abs = from + i
-        val tail = s.substring(abs + 4).trim.toLowerCase
-        if (tail.startsWith("matched") || tail.startsWith("not ") ||
-          tail.startsWith("not\t") || tail.startsWith("not\n")) out += abs
-        from = abs + 4
-      }
-    }
-    out.toSeq
-  }
-
-  /** `MERGE INTO t [AS a] USING (<subquery>)|<table> [AS b] ON <cond>
-    *   [WHEN MATCHED [AND c] THEN UPDATE SET x = e, …]
-    *   [WHEN MATCHED [AND c] THEN DELETE]
-    *   [WHEN NOT MATCHED [AND c] THEN INSERT [(cols)] VALUES (e, …)]`
+  /** `MERGE INTO t [[AS] a] USING <table> | (<query>) [AS] b ON <cond>
+    * WHEN MATCHED [AND c] THEN UPDATE SET … | DELETE …
+    * WHEN NOT MATCHED [AND c] THEN INSERT (cols) VALUES (…)`, in
+    * Spark's MERGE grammar, parsed by Spark's parser ([[doWrite]]).
     *
     * The upsert statement the reference's surface lacks (its users
     * emulate it with INSERT-probe-then-UPDATE loops over point gets —
     * `physical_plan/insert.rs:195-218`'s one-key-at-a-time check is
     * the closest artifact). Beyond-parity §2.7 extension, executed as
-    * ONE set-oriented plan instead of per-key probes:
+    * set-oriented DataFrame operations over the aliased target and
+    * source instead of per-key probes:
     *
     *  1. file prune — a LEFT SEMI join of target against source under
-    *     the ON condition, grouped by `input_file_name()`, finds the
-    *     files holding any matched row. Untouched files are CARRIED
-    *     into the new version as hard links (the [[mutateVersion]]
-    *     economics): a merge that touches 1% of files rewrites 1%.
+    *     the ON condition finds the files holding any matched row
+    *     (their names taken at the target's scan). Untouched
+    *     files are CARRIED into the new version as hard links (the
+    *     [[mutateVersion]] economics): a merge that touches 1% of
+    *     files rewrites 1%.
     *  2. one LEFT OUTER join of the touched subset against the source
-    *     computes, per target row, the first applicable clause in
-    *     declared order (0 keep / 1 update / 2 delete) and both the
-    *     current and assigned column values; kept/updated rows keep
+    *     computes, per target row, the first applicable MATCHED action
+    *     in declared order (0 keep / 1 update / 2 delete, one `when`
+    *     chain) and the row's assigned values; kept/updated rows keep
     *     their rowid (CDF-visible as update_pre/postimage).
     *  3. unmatched source rows enter through a LEFT ANTI join with the
     *     INSERT projection (fresh rowids), duplicate-key checked
@@ -2053,110 +2048,53 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     *
     * SQL-standard guard: if any WHEN MATCHED clause exists and one
     * target row matches >1 source rows, the statement fails (1105)
-    * rather than updating nondeterministically. Multiple UPDATE or
-    * multiple DELETE clauses are rejected; conditions containing a
-    * top-level CASE…THEN are the documented parser limitation (wrap
-    * them in parentheses). KV tables are rejected: their INSERT is
-    * already newest-wins upsert by construction. Affected rows =
-    * updated + deleted + inserted. */
-  private def doMerge(stmt: String): GraftResult = {
-    val head = "(?is)^merge\\s+into\\s+(.*)$".r.findFirstMatchIn(stmt)
-      .getOrElse(throw Errors.generic(s"cannot parse: ${stmt.take(60)}"))
-    val rest0 = head.group(1)
-    val iUsing = indexOfKeyword(rest0, "using")
-    if (iUsing < 0) throw Errors.generic("MERGE requires USING <source>")
-    val (targetName, tAliasOpt) = parseRelAlias(rest0.substring(0, iUsing))
-    val afterUsing = rest0.substring(iUsing + 5).trim
-    val iOn = indexOfKeyword(afterUsing, "on")
-    if (iOn < 0) throw Errors.generic("MERGE requires ON <condition>")
-    val sourcePart = afterUsing.substring(0, iOn).trim
-    val afterOn = afterUsing.substring(iOn + 2)
-    val whenStartsInOn = whenClauseStarts(afterOn)
-    if (whenStartsInOn.isEmpty)
-      throw Errors.generic("MERGE requires at least one WHEN clause")
-    val onCond = rewrite(afterOn.substring(0, whenStartsInOn.head).trim)
-    val whensText = afterOn.substring(whenStartsInOn.head)
-
-    // --- clause list, declared order preserved
-    val starts = whenClauseStarts(whensText)
-    val clauseTexts = starts.zipAll(starts.drop(1), 0, whensText.length)
-      .map { case (a, b) => whensText.substring(a, b).trim }
-    val updRe =
-      "(?is)^when\\s+matched\\s+(?:and\\s+(.*?)\\s+)?then\\s+update\\s+set\\s+(.*)$".r
-    val delRe = "(?is)^when\\s+matched\\s+(?:and\\s+(.*?)\\s+)?then\\s+delete$".r
-    val insRe = ("(?is)^when\\s+not\\s+matched\\s+(?:and\\s+(.*?)\\s+)?then\\s+" +
-      "insert\\s*(?:\\(([^)]*)\\)\\s*)?values\\s*\\((.*)\\)$").r
-    // (action code, optional AND-condition, payload) in declared order;
-    // action 1 = update, 2 = delete
-    var updClause: Option[(Int, Option[String], String)] = None
-    var delClause: Option[(Int, Option[String])] = None
-    var insClause: Option[(Option[String], Option[String], String)] = None
-    var matchedOrder = List.empty[Int] // action codes in declared order
-    clauseTexts.foreach {
-      case updRe(cond, sets) =>
-        if (updClause.isDefined)
-          throw Errors.generic("MERGE supports at most one WHEN MATCHED … UPDATE clause")
-        updClause = Some((1, Option(cond), sets)); matchedOrder :+= 1
-      case delRe(cond) =>
-        if (delClause.isDefined)
-          throw Errors.generic("MERGE supports at most one WHEN MATCHED … DELETE clause")
-        delClause = Some((2, Option(cond))); matchedOrder :+= 2
-      case insRe(cond, cols, exprs) =>
-        if (insClause.isDefined)
-          throw Errors.generic("MERGE supports at most one WHEN NOT MATCHED clause")
-        insClause = Some((Option(cond), Option(cols), exprs))
-      case other =>
-        throw Errors.generic(s"cannot parse MERGE clause: ${other.take(60)}")
+    * rather than updating nondeterministically. Rejected with 1105:
+    * more than one UPDATE, DELETE or NOT MATCHED clause, `UPDATE SET
+    * *`, `INSERT *`, `WHEN NOT MATCHED BY SOURCE`, a derived source
+    * with no alias, and KV targets (their INSERT is already
+    * newest-wins upsert by construction). Affected rows = updated +
+    * deleted + inserted. */
+  private def doMerge(td: TableDef, tA: String, m: MergeIntoTable): GraftResult = {
+    requireNotKv(td, "MERGE")
+    def unsupported(what: String) = Errors.generic(s"MERGE: $what is not supported")
+    if (m.notMatchedBySourceActions.nonEmpty)
+      throw unsupported("WHEN NOT MATCHED BY SOURCE")
+    // (action code, condition) in declared order; 1 = update, 2 = delete
+    val matched = m.matchedActions.map {
+      case u: UpdateAction => (1, u.condition)
+      case d: DeleteAction => (2, d.condition)
+      case _ => throw unsupported("UPDATE SET *")
     }
-
-    val td = lookup(targetName)
-    requireWritable(td)
-    requireNotKv(td, "MERGE") // kv INSERT already upserts newest-wins
-    val tA = tAliasOpt.getOrElse(td.name)
-
-    // --- source relation
-    val (srcDf0, sA) =
-      if (sourcePart.startsWith("(")) {
-        var depth = 0; var i = 0; var end = -1; var quote: Char = 0
-        while (i < sourcePart.length && end < 0) {
-          val c = sourcePart.charAt(i)
-          if (quote != 0) { if (c == quote) quote = 0 }
-          else c match {
-            case '\'' | '"' | '`' => quote = c
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) end = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (end < 0) throw Errors.generic("unbalanced parens in MERGE USING")
-        val alias = sourcePart.substring(end + 1).trim.split("\\s+").toSeq
-          .filter(_.nonEmpty) match {
-          case Seq() =>
-            throw Errors.generic("MERGE: a derived USING source requires an alias")
-          case Seq(a) => ident(a)
-          case Seq(as_, a) if as_.equalsIgnoreCase("as") => ident(a)
-          case other =>
-            throw Errors.generic(s"cannot parse USING alias: ${other.mkString(" ")}")
-        }
-        (doSelect(sourcePart.substring(1, end)), alias)
-      } else {
-        val (n, a) = parseRelAlias(sourcePart)
-        (doSelect(s"SELECT * FROM $n"), a.getOrElse(ident(n.split('.').last)))
-      }
-    if (srcDf0.columns.contains("__merge_m"))
-      throw Errors.generic("MERGE: source may not have a column named __merge_m")
+    Seq(1 -> "UPDATE", 2 -> "DELETE").foreach { case (code, what) =>
+      if (matched.count(_._1 == code) > 1)
+        throw Errors.generic(s"MERGE supports at most one WHEN MATCHED … $what clause")
+    }
+    val assigns = m.matchedActions.collectFirst {
+      case u: UpdateAction => assignedColumns(u.assignments, td)
+    }.getOrElse(Map.empty)
+    val insert = m.notMatchedActions match {
+      case Seq() => None
+      case Seq(i: InsertAction) => Some((i.condition, assignedColumns(i.assignments, td)))
+      case Seq(_) => throw unsupported("INSERT *")
+      case _ => throw Errors.generic("MERGE supports at most one WHEN NOT MATCHED clause")
+    }
+    val sA = m.sourceTable match {
+      case SubqueryAlias(a, _) => a.name
+      case r: UnresolvedRelation => r.multipartIdentifier.last
+      case _ => throw Errors.generic("MERGE: a derived USING source requires an alias")
+    }
+    val srcDf0 = graftshim.ofRows(spark)(_ => m.sourceTable)
+    if (srcDf0.columns.exists(_.startsWith("__merge_")))
+      throw Errors.generic("MERGE: source may not have a column named __merge_*")
     // evaluated by the probe, the multi-match check, both legs, and
     // the counts — persist so a nondeterministic source stays stable
     val srcDf = srcDf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val nonce = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val tv = s"__merge_t_$nonce"
-    val sv = s"__merge_s_$nonce"
+    val src = srcDf.as(sA)
+    val on = graftshim.column(m.mergeCondition)
+    def cond(c: Option[Expression]) = c.map(graftshim.column).getOrElse(lit(true))
     def emptyTarget: DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], td.fullSchema)
     try {
-      srcDf.createOrReplaceTempView(sv)
       val hasData = tableHasData(td)
       // --- step 1: matched-file prune (semi-join flavor of mutateVersion)
       val allFiles =
@@ -2164,105 +2102,52 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         else Option(new File(tableDir(td)).listFiles())
           .getOrElse(Array.empty[File])
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val matchedNames: Set[String] = if (!hasData) Set.empty else {
-        readFull(td).createOrReplaceTempView(tv)
-        // input_file_name() must bind below the join (single-source
-        // rule), so the target subquery computes it at the scan
-        spark.sql("SELECT DISTINCT __f FROM " +
-            s"(SELECT input_file_name() AS __f, * FROM $tv) AS `$tA` " +
-            s"LEFT SEMI JOIN $sv AS `$sA` ON $onCond")
-          .collect()
-          .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
-          .toSet
-      }
+      val matchedNames: Set[String] =
+        if (!hasData) Set.empty
+        else withFileName(td, tA).join(src, on, "left_semi")
+          .select("__f").distinct().collect().map(_.getString(0)).toSet
       val (touched, carried) = allFiles.partition(f => matchedNames(f.getName))
-      val sub =
+      val tgt = (
         if (touched.isEmpty) emptyTarget
         else if (carried.isEmpty) readFull(td)
         else spark.read.schema(td.fullSchema)
-          .parquet(touched.map(_.getPath).toIndexedSeq: _*)
-      sub.createOrReplaceTempView(tv)
+          .parquet(touched.map(_.getPath).toIndexedSeq: _*)).as(tA)
 
       // --- SQL-standard cardinality guard (only when a MATCHED clause
       // can act on the ambiguity)
-      if (matchedOrder.nonEmpty && touched.nonEmpty) {
-        val multi = spark.sql(
-          s"SELECT `$tA`.`$RowId` AS __rid FROM $tv AS `$tA` " +
-            s"JOIN $sv AS `$sA` ON $onCond " +
-            s"GROUP BY `$tA`.`$RowId` HAVING count(*) > 1 LIMIT 1").collect()
-        if (multi.nonEmpty) throw GraftException(1105,
+      if (matched.nonEmpty && touched.nonEmpty &&
+          tgt.join(src, on).groupBy(tgt(RowId)).count()
+            .where(col("count") > 1).limit(1).collect().nonEmpty)
+        throw GraftException(1105,
           "MERGE: a row of the target table matched multiple source rows")
-      }
 
       // --- step 2: one left-join pass over the touched subset
-      val assigns: Seq[(String, String)] = updClause.toSeq.flatMap {
-        case (_, _, sets) =>
-          splitTopLevel(sets, ',').map { a =>
-            val eq = a.indexOf('=')
-            if (eq < 0) throw Errors.generic(s"bad assignment: $a")
-            val c = ident(a.substring(0, eq))
-            if (!td.columns.exists(_.name == c))
-              throw Errors.unknownColumn(c, td.name)
-            c -> a.substring(eq + 1).trim
-          }
-      }
-      val assignedSet = assigns.map(_._1).toSet
-      val actArms = matchedOrder.map { code =>
-        val condOpt = if (code == 1) updClause.get._2 else delClause.get._2
-        val c = condOpt.map(x => s"(${rewrite(x)})").getOrElse("TRUE")
-        s"WHEN $c THEN $code"
-      }.mkString(" ")
-      val actCase = "CAST(CASE WHEN `" + sA + "`.`__merge_m` IS NULL THEN 0 " +
-        actArms + " ELSE 0 END AS INT)"
-      val typeOf = td.columns.map(c => c.name -> c.sparkType.sql).toMap
-      val innerCols =
-        td.columns.map(c => s"`$tA`.`${c.name}` AS `__cur_${c.name}`") ++
-          assigns.map { case (c, e) =>
-            s"CAST((${rewrite(e)}) AS ${typeOf(c)}) AS `__upd_$c`"
-          }
-      val innerSql =
-        s"SELECT `$tA`.`$RowId` AS `$RowId`, $actCase AS __act, " +
-          innerCols.mkString(", ") +
-          s" FROM $tv AS `$tA` LEFT JOIN " +
-          s"(SELECT 1 AS `__merge_m`, * FROM $sv) AS `$sA` ON $onCond"
-      val keptCols = td.columns.map { c =>
-        if (assignedSet(c.name))
-          s"CASE WHEN __act = 1 THEN `__upd_${c.name}` ELSE `__cur_${c.name}` END AS `${c.name}`"
-        else s"`__cur_${c.name}` AS `${c.name}`"
-      }
-      val keptSql = s"SELECT `$RowId`, ${keptCols.mkString(", ")} " +
-        s"FROM ($innerSql) WHERE __act <> 2"
-      val kept = spark.sql(keptSql)
+      val marked = srcDf.withColumn("__merge_m", lit(1)).as(sA)
+      val act = matched.foldLeft(when(marked("__merge_m").isNull, 0)) {
+        case (w, (code, c)) => w.when(cond(c), code)
+      }.otherwise(0)
+      val acted = tgt.join(marked, on, "left_outer")
+        .select(col("*"), act.as("__merge_act"))
+      val kept = acted.where(col("__merge_act") =!= 2)
+        .select(tgt(RowId) +: td.columns.map { c =>
+          assigns.get(c.name).fold(tgt(c.name))(e =>
+            when(col("__merge_act") === 1, e.cast(c.sparkType))
+              .otherwise(tgt(c.name))).as(c.name)
+        }: _*)
       val actCounts: Map[Int, Long] =
         if (touched.isEmpty) Map.empty
-        else spark.sql(s"SELECT __act, count(*) AS n FROM ($innerSql) GROUP BY __act")
+        else acted.groupBy("__merge_act").count()
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val nUpd = actCounts.getOrElse(1, 0L)
       val nDel = actCounts.getOrElse(2, 0L)
 
       // --- step 3: NOT MATCHED inserts (anti join; matched target rows
       // all live in touched files, so anti-vs-sub ≡ anti-vs-full)
-      val insRowsOpt = insClause.map { case (condOpt, colsOpt, exprsText) =>
-        val exprs = splitTopLevel(exprsText, ',')
-        val targetCols = colsOpt
-          .map(g => splitTopLevel(g, ',').map(ident))
-          .getOrElse(td.columns.map(_.name))
-        val unknown = targetCols.filterNot(c => td.columns.exists(_.name == c))
-        if (unknown.nonEmpty) throw Errors.unknownColumn(unknown.head, td.name)
-        if (exprs.size != targetCols.size)
-          throw GraftException(1136,
-            s"Column count doesn't match value count (expected ${targetCols.size}, got ${exprs.size})")
-        val proj = td.columns.map { c =>
-          val i = targetCols.indexOf(c.name)
-          if (i >= 0) s"CAST((${rewrite(exprs(i))}) AS ${typeOf(c.name)}) AS `${c.name}`"
-          else s"CAST(NULL AS ${typeOf(c.name)}) AS `${c.name}`"
-        }
-        val insSql = s"SELECT ${proj.mkString(", ")} FROM $sv AS `$sA` " +
-          s"LEFT ANTI JOIN $tv AS `$tA` ON $onCond" +
-          condOpt.map(c => s" WHERE (${rewrite(c)})").getOrElse("")
-        spark.sql(insSql).select(
-          expr("replace(uuid(), '-', '')").as(RowId) +:
-            td.columns.map(c => col(c.name)): _*)
+      val insRowsOpt = insert.map { case (c, values) =>
+        src.join(tgt, on, "left_anti").where(cond(c))
+          .select(expr("replace(uuid(), '-', '')").as(RowId) +:
+            td.columns.map(tc =>
+              values.getOrElse(tc.name, lit(null)).cast(tc.sparkType).as(tc.name)): _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
       try {
@@ -2281,11 +2166,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
         writeVersion(td, image, carried.toIndexedSeq)
         AffectedRows(nUpd + nDel + nIns)
       } finally insRowsOpt.foreach(_.unpersist())
-    } finally {
-      spark.catalog.dropTempView(sv)
-      try spark.catalog.dropTempView(tv) catch { case _: Exception => }
-      srcDf.unpersist()
-    }
+    } finally srcDf.unpersist()
   }
 
   // ------------------------------------------------------------------
@@ -2367,8 +2248,8 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     } finally { if (knownCount.isEmpty) rows.unpersist() }
   }
 
-  private def kvUpdate(td: TableDef, assigns: Map[String, String],
-      cond: Column): GraftResult = {
+  private def kvUpdate(td: TableDef, alias: String,
+      assigns: Map[String, Column], cond: Column): GraftResult = {
     if (assigns.contains("k")) throw Errors.generic(
       "kv tables: the key 'k' is the row identity and cannot be " +
         "UPDATEd (DELETE + INSERT moves a row)")
@@ -2376,10 +2257,9 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     // matched rows are appended (with their updated value), so the
     // statement costs O(matched), and the new segment shadows the old
     // values — no read-modify-rewrite of untouched data
-    val cur = spark.table(kvQualified(td))
+    val cur = spark.table(kvQualified(td)).as(alias)
     val updated = cur.where(cond).select(col("k"),
-        assigns.get("v").map(e => expr(rewrite(e)).cast("string").as("v"))
-          .getOrElse(col("v")))
+        assigns.get("v").fold(col("v"))(_.cast("string").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = updated.count()
@@ -2392,12 +2272,12 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     } finally updated.unpersist()
   }
 
-  private def kvDelete(td: TableDef, cond: Column): GraftResult = {
+  private def kvDelete(td: TableDef, alias: String, cond: Column): GraftResult = {
     import graft.sources.{KvSegment, KvSegmentWriter}
     val dir = tableDir(td)
     val segs = KvSegment.listSegments(dir)
     if (segs.isEmpty) return AffectedRows(0)
-    val cur = spark.table(kvQualified(td))
+    val cur = spark.table(kvQualified(td)).as(alias)
     // matched keys come from the merged CURRENT image (cond may test
     // v): a key deleted "now" must vanish from every segment that
     // holds any version of it. limit(K+1) gives an exact count when
@@ -2474,6 +2354,15 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     AffectedRows(n)
   }
 
+  /** `td`'s full image aliased `alias`, plus `__f`, the name of the
+    * file each row comes from. The name is the scan's `_metadata`
+    * column, so it survives the shuffle join a subquery in a condition
+    * can plan into (`input_file_name()` above a shuffle reads ""), and
+    * a filter on the frame still pushes into the scan. Part-file names
+    * are unique within a version directory. */
+  private def withFileName(td: TableDef, alias: String): DataFrame =
+    readFull(td).select(col("*"), col("_metadata.file_name").as("__f")).as(alias)
+
   /** File-pruned COW mutation: one scan finds the files that contain
     * ≥1 row matching `cond` (parquet min/max row-group stats + the
     * pushed predicate make never-matching files cheap to rule out —
@@ -2484,17 +2373,14 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     * handful of files its predicate touches instead of the full image
     * — at 100 TB this is the difference between a point mutation and
     * re-writing the table. Returns the matched-row count. */
-  private def mutateVersion(td: TableDef, cond: Column,
+  private def mutateVersion(td: TableDef, alias: String, cond: Column,
       rewriteMatched: DataFrame => DataFrame): Long = {
-    val full = readFull(td)
-    val perFile = full.where(cond)
-      .groupBy(input_file_name().as("__f")).agg(count(lit(1)).as("__n"))
+    val full = readFull(td).as(alias)
+    val perFile = withFileName(td, alias).where(cond)
+      .groupBy("__f").agg(count(lit(1)).as("__n"))
       .collect()
     val n = perFile.map(_.getLong(1)).sum
-    // input_file_name() yields URIs; part-file names are unique within
-    // a version directory, so compare by name
-    val matchedNames = perFile.map(r => r.getString(0)
-      .substring(r.getString(0).lastIndexOf('/') + 1)).toSet
+    val matchedNames = perFile.map(_.getString(0)).toSet
     val allFiles = Option(new File(tableDir(td)).listFiles())
       .getOrElse(Array.empty[File])
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -2503,7 +2389,7 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
       if (touched.isEmpty) full.where(lit(false))
       else if (carried.isEmpty) full
       else spark.read.schema(td.fullSchema)
-        .parquet(touched.map(_.getPath).toIndexedSeq: _*)
+        .parquet(touched.map(_.getPath).toIndexedSeq: _*).as(alias)
     writeVersion(td, rewriteMatched(sub), carried.toIndexedSeq)
     n
   }
@@ -2616,9 +2502,9 @@ class GraftEngine(val spark: SparkSession, warehouse: String,
     val name = ident(stmt.trim.split("\\s+", 2)(1))
     if (!schemas.contains(name) && name != InfoSchemaDb)
       throw Errors.unknownDb(name)
-    // session state only: SELECTs qualify bare names with it on the
-    // parsed plan, and mutating statements pin the shared Spark
-    // session's current database to it under the write lock
+    // session state only: statements qualify bare names with it on
+    // the parsed plan; the shared Spark session's current database is
+    // never set
     active.currentSchema = Some(name)
     AffectedRows(1)
   }

@@ -397,6 +397,75 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       AffectedRows(2))
     assert(rows(a.sql("select id from t order by id")) ==
       Seq(Seq(3L), Seq(4L)))
+    // …and so does an INSERT's SELECT
+    assert(rows(b.sql("select count(*) from u")) == Seq(Seq(2L)))
+    a.sql("insert into t select max(id) + 10 from u")
+    assert(rows(a.sql("select id from t order by id")) ==
+      Seq(Seq(3L), Seq(4L), Seq(12L)))
+  }
+
+  test("UPDATE and DELETE subqueries read engine views and VERSION AS OF") {
+    val e = freshEngine()
+    e.setVersionRetention(10) // every INSERT commits a version
+    e.sql("create schema dv"); e.sql("use dv")
+    e.sql("create table t (id int, v int, PRIMARY KEY(id))")
+    e.sql("insert into t values (1, 0), (2, 0), (3, 0), (4, 0), (5, 0)")
+    e.sql("create table u (id int, PRIMARY KEY(id))")
+    e.sql("insert into u values (1), (2), (3)") // u v1
+    e.sql("insert into u values (4)")           // u v2
+    e.sql("create view vu as select id from u where id >= 2")
+    def ids(sql: String) = rows(e.sql(sql)).map(_.head)
+    assert(ids("select id from t where id in (select id from vu) order by id") ==
+      Seq(2L, 3L, 4L))
+    assert(e.sql("update t set v = 99 where id in (select id from vu)") ==
+      AffectedRows(3))
+    assert(ids("select id from t where v = 99 order by id") == Seq(2L, 3L, 4L))
+    assert(ids("select id from t where id not in " +
+      "(select id from u version as of 1) order by id") == Seq(4L, 5L))
+    assert(e.sql("delete from t where id not in " +
+      "(select id from u version as of 1)") == AffectedRows(2))
+    assert(ids("select id from t order by id") == Seq(1L, 2L, 3L))
+    assert(e.sql("delete from t where id in (select id from vu)") ==
+      AffectedRows(2))
+    assert(ids("select id from t order by id") == Seq(1L))
+  }
+
+  test("a condition's subquery planned as a shuffle join still finds its files") {
+    val e = freshEngine()
+    e.sql("create schema sj"); e.sql("use sj")
+    e.sql("create table t (id int, v int, PRIMARY KEY(id))")
+    e.sql("insert into t values (1, 0), (2, 0), (3, 0), (4, 0), (5, 0)")
+    e.sql("create table u (id int, PRIMARY KEY(id))")
+    e.sql("insert into u values (1), (2)")
+    // no broadcast: each IN subquery plans as a sort-merge semi join,
+    // above which input_file_name() reads ""
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      assert(e.sql("delete from t where id in (select id from u)") == AffectedRows(2))
+      assert(e.sql("update t set v = 9 where id in (select id + 2 from u)") ==
+        AffectedRows(2))
+      assert(e.sql("merge into t using u on t.id = u.id + 4 " +
+        "when matched then update set v = 7") == AffectedRows(1))
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(rows(e.sql("select id, v from t order by id")) ==
+      Seq(Seq(3L, 9L), Seq(4L, 9L), Seq(5L, 7L)))
+  }
+
+  test("UPDATE and DELETE take a target alias") {
+    val e = freshEngine()
+    e.sql("create schema da"); e.sql("use da")
+    e.sql("create table t (id int, v int, PRIMARY KEY(id))")
+    e.sql("insert into t values (1, 0), (2, 0), (3, 0), (4, 0)")
+    e.sql("create table u (id int, PRIMARY KEY(id))")
+    e.sql("insert into u values (3)")
+    assert(e.sql("update t as x set v = x.v + 7 where x.id = 1") == AffectedRows(1))
+    assert(e.sql("update t set v = 5 where t.id = 2") == AffectedRows(1))
+    assert(e.sql("delete from t x where x.id = 4") == AffectedRows(1))
+    // the alias reaches a correlated subquery
+    assert(e.sql("delete from t x where exists " +
+      "(select 1 from u where u.id = x.id)") == AffectedRows(1))
+    assert(rows(e.sql("select id, v from t order by id")) ==
+      Seq(Seq(1L, 7L), Seq(2L, 5L)))
   }
 
   test("views, VERSION AS OF and rowid resolve inside CTE definitions and subqueries") {
@@ -1171,6 +1240,14 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a string literal containing the phrase is NOT the clause
     e.sql("insert into t values (7, 'on duplicate key update v = 1', 0)")
     assert(rows(e.sql("select hits from t where id = 7")) == Seq(Seq(0)))
+    // …nor is VALUES(x) inside a literal a reference to the new row
+    assert(e.sql("insert into t values (7, 'b', 0) on duplicate key update " +
+      "v = concat('values(v)', VALUES(v))") == AffectedRows(2))
+    assert(rows(e.sql("select v from t where id = 7")) == Seq(Seq("values(v)b")))
+    // a subquery in an assignment reads the session's schema
+    assert(e.sql("insert into t values (9, 'n', 0) on duplicate key update " +
+      "hits = (select max(hits) from src) + 1") == AffectedRows(2))
+    assert(rows(e.sql("select hits from t where id = 9")) == Seq(Seq(6)))
   }
 
   test("odku: resolves on ANY unique index (MySQL order); counts") {

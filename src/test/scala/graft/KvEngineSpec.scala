@@ -136,6 +136,27 @@ class KvEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(e.sql("select v from kvt where k = 10")) == Seq(Seq("x")))
   }
 
+  test("update and delete subqueries read engine views and VERSION AS OF") {
+    val (e, _) = freshEngine()
+    e.setVersionRetention(10) // every COW INSERT commits a version
+    e.sql("create table kvt (k int, v char) using kv")
+    e.sql("insert into kvt select id as k, 'v' as v from range(1, 11)")
+    e.sql("create table ks (id int, PRIMARY KEY(id))")
+    e.sql("insert into ks values (1), (2), (3)") // ks v1
+    e.sql("insert into ks values (4)")           // ks v2
+    e.sql("create view kview as select id from ks where id >= 2")
+    assert(e.sql("update kvt set v = 'w' where k in (select id from kview)") ==
+      AffectedRows(3))
+    assert(rows(e.sql("select k from kvt where v = 'w' order by k")) ==
+      Seq(Seq(2L), Seq(3L), Seq(4L)))
+    assert(e.sql("delete from kvt where k in (select id from ks version as of 1)") ==
+      AffectedRows(3))
+    assert(e.sql("delete from kvt x where x.k in (select id from kview)") ==
+      AffectedRows(1))
+    assert(e.sql("update kvt as x set v = 'z' where x.k = 5") == AffectedRows(1))
+    assert(rows(e.sql("select count(*) as n from kvt")) == Seq(Seq(6L)))
+  }
+
   test("small delete takes the fence-pruned path: untouched segments carried") {
     val (e, wh) = freshEngine()
     e.sql("create table kvt (k int, v char) using kv")

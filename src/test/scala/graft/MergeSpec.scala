@@ -11,7 +11,8 @@ import graft.engine._
   * (`/root/reference/src/physical_plan/insert.rs:195-218`). Covers
   * clause combinations, clause-order precedence, file-prune carry,
   * the multi-match 1105 guard, duplicate-key 1062 on the insert leg,
-  * CDF visibility of merged rows, and parser errors.
+  * CDF visibility of merged rows, names resolved on the parsed plan,
+  * and the forms the engine rejects.
   */
 class MergeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -163,13 +164,74 @@ class MergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(Seq(2L), Seq(4L)))
   }
 
+  test("views in the ON and AND conditions resolve as in a SELECT") {
+    val e = freshEngine()
+    seedAccounts(e)
+    e.sql("create table delta (id int, amt float)")
+    e.sql("insert into delta values (1, 1.0), (2, 2.0), (3, 3.0), (7, 7.0)")
+    e.sql("create view segs as select id from acct where seg = 'A'")
+    e.sql("create view big as select id from delta where amt >= 2.0")
+    // ON: only segment-A rows match, so id 2 stays 20.0; AND: only
+    // `big` rows update, so id 1 stays 10.0
+    assert(e.sql(
+      """merge into acct t using delta d
+        |on t.id = d.id and t.id in (select id from segs)
+        |when matched and d.id in (select id from big) then update set bal = d.amt
+        |""".stripMargin) == AffectedRows(1))
+    assert(e.sql(
+      """merge into acct t using delta d on t.id = d.id
+        |when not matched and d.id in (select id from big) then
+        |  insert (id, bal, seg) values (d.id, d.amt, 'N')""".stripMargin) ==
+      AffectedRows(1))
+    assert(rows(e.sql("select id, bal, seg from acct order by id")) == Seq(
+      Seq(1L, 10.0, "A"), Seq(2L, 20.0, "B"), Seq(3L, 3.0, "A"),
+      Seq(4L, 40.0, "C"), Seq(7L, 7.0, "N")))
+  }
+
+  test("assignments and conditions are Spark expressions, CASE WHEN NOT included") {
+    val e = freshEngine()
+    seedAccounts(e)
+    e.sql("create table delta (id int, amt float)")
+    e.sql("insert into delta values (1, 5.0), (2, -5.0), (3, -1.0), (6, 6.0)")
+    val r = e.sql(
+      """merge into acct as t using delta as d on t.id = d.id
+        |when matched and case when not d.amt > 0 then t.id = 2 else true end then
+        |  update set bal = case when not d.amt > 0 then 0.0 else t.bal + d.amt end,
+        |  seg = 'when matched then'
+        |when not matched then insert (id, seg) values (d.id, 'when not matched')
+        |""".stripMargin)
+    assert(r == AffectedRows(3))
+    assert(rows(e.sql("select id, bal, seg from acct order by id")) == Seq(
+      Seq(1L, 15.0, "when matched then"), Seq(2L, 0.0, "when matched then"),
+      Seq(3L, 30.0, "A"), Seq(4L, 40.0, "C"), Seq(6L, null, "when not matched")))
+  }
+
+  test("forms the engine does not run answer 1105") {
+    val e = freshEngine()
+    seedAccounts(e)
+    def err(sql: String): GraftException = intercept[GraftException](e.sql(sql))
+    val head = "merge into acct t using acct s on t.id = s.id "
+    for ((clause, what) <- Seq(
+        "when matched then update set *" -> "UPDATE SET *",
+        "when not matched then insert *" -> "INSERT *",
+        "when not matched by source then delete" -> "NOT MATCHED BY SOURCE")) {
+      val ex = err(head + clause)
+      assert(ex.code == 1105 && ex.msg.contains(what), ex.msg)
+    }
+    // INSERT must list its columns: Spark's MERGE grammar has no
+    // column-less VALUES form, so the statement does not parse
+    val ex = err(head + "when not matched then insert values (s.id, 1.0, 'x')")
+    assert(ex.code == 1105 && ex.msg.contains("PARSE_SYNTAX_ERROR"), ex.msg)
+    assert(rows(e.sql("select count(*) as n from acct")) == Seq(Seq(4L)))
+  }
+
   test("parser and surface errors") {
     val e = freshEngine()
     seedAccounts(e)
     // derived source without alias
-    assertThrows[GraftException](e.sql(
+    assert(intercept[GraftException](e.sql(
       "merge into acct using (select 1 as id) on acct.id = id " +
-        "when matched then delete"))
+        "when matched then delete")).msg.contains("requires an alias"))
     // no WHEN clause
     assertThrows[GraftException](e.sql(
       "merge into acct t using acct s on t.id = s.id"))
